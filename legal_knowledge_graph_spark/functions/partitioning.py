@@ -12,6 +12,8 @@ operators/dedup.py in round 6).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 
 
@@ -61,6 +63,28 @@ def murmur3_int32(x: int, seed: int = 42) -> int:
     return h1 - (1 << 32) if h1 >= (1 << 31) else h1
 
 
+# cap of the slot-key scan, in tries per shuffle slot: the chance that
+# 32*n tries all miss a given one of n slots is about e^-32
+_MAX_TRIES_PER_SLOT = 32
+
+
+@functools.lru_cache(maxsize=16)
+def _slot_keys(n: int, n_buckets: int) -> tuple[int, ...] | None:
+    """For each bucket b (n >= n_buckets), the smallest non-negative int
+    whose Murmur3 hash lands in shuffle slot b*n//n_buckets of n, found
+    in one scan of at most ``_MAX_TRIES_PER_SLOT * n`` ints; None if the
+    scan hits that cap first."""
+    slot_bucket = {b * n // n_buckets: b for b in range(n_buckets)}
+    keys = [0] * n_buckets
+    for x in range(_MAX_TRIES_PER_SLOT * n):
+        b = slot_bucket.pop(murmur3_int32(x) % n, None)
+        if b is not None:
+            keys[b] = x
+            if not slot_bucket:
+                return tuple(keys)
+    return None
+
+
 def repartition_buckets_balanced(df: DataFrame, bucket_col: str, n_buckets: int) -> DataFrame:
     """Cluster ``df`` by an integer bucket column for a partitioned
     write, with EXACT slot balance.
@@ -72,11 +96,11 @@ def repartition_buckets_balanced(df: DataFrame, bucket_col: str, n_buckets: int)
     re-coalesces to advisory-sized partitions, starving write
     parallelism instead. Here each bucket value is mapped to a small
     "magic" integer whose Murmur3 hash lands in the slot we CHOOSE
-    (slot b*n//n_buckets — found by brute force on the driver, ~n
-    tries per bucket), so ``repartition(n, magic)`` yields one slot
-    per bucket when n >= n_buckets and an even grouping below — the
-    one-file-set-per-bucket layout AND balanced tasks, deterministic,
-    no sampling pass, no AQE dependence."""
+    (slot b*n//n_buckets, ``_slot_keys``), so ``repartition(n, magic)``
+    yields one slot per bucket — the one-file-set-per-bucket layout AND
+    balanced tasks, deterministic, no sampling pass, no AQE dependence.
+    If the capped key scan fails, it falls back to a plain
+    ``repartition(n, bucket)``."""
     from pyspark.sql import functions as F
 
     sc = df.sparkSession.sparkContext
@@ -85,19 +109,9 @@ def repartition_buckets_balanced(df: DataFrame, bucket_col: str, n_buckets: int)
         sc.defaultParallelism,
         n_buckets,
     )
-
-    def pmod(h: int) -> int:
-        return h % n if h % n >= 0 else h % n + n
-
-    magic = {}
-    for b in range(n_buckets):
-        want = b * n // n_buckets
-        x = 0
-        while pmod(murmur3_int32(x)) != want:
-            x += 1
-        magic[b] = x
-    mapping = F.create_map(
-        *[F.lit(v) for kv in magic.items() for v in kv]
-    )
+    keys = _slot_keys(n, n_buckets)
+    if keys is None:
+        return df.repartition(n, F.col(bucket_col))
+    mapping = F.create_map(*[F.lit(v) for kv in enumerate(keys) for v in kv])
     salt = F.element_at(mapping, F.col(bucket_col).cast("int")).cast("int")
     return df.repartition(n, salt.alias("_write_slot"))

@@ -295,21 +295,22 @@ def attach_vectors(nodes: DataFrame, dim: int = 64) -> DataFrame:
         import numpy as np
 
         for batch in batches:
-            texts = [t or "" for t in batch.column("_vec_text").to_pylist()]
-            vecs = embed_texts_np(texts, dim)
             ent = np.asarray(
                 pa.compute.equal(batch.column("label"), "Entity").to_numpy(
                     zero_copy_only=False
                 ),
                 dtype=bool,
             )
+            # Entity rows get a null vector: embed only the others
+            texts = pa.compute.filter(batch.column("_vec_text"), pa.array(~ent))
+            vecs = embed_texts_np([t or "" for t in texts.to_pylist()], dim)
             n = batch.num_rows
             counts = np.where(ent, 0, dim).astype(np.int64)
             offsets = np.zeros(n + 1, dtype=np.int32)
             np.cumsum(counts, out=offsets[1:])
             vec_arr = pa.ListArray.from_arrays(
                 pa.array(offsets, pa.int32()),
-                pa.array(vecs[~ent].astype(np.float32).ravel(), pa.float32()),
+                pa.array(vecs.astype(np.float32).ravel(), pa.float32()),
                 mask=pa.array(ent),
             )
             yield pa.RecordBatch.from_arrays(

@@ -15,6 +15,10 @@ is the one you would set on a real 1000-executor cluster:
 - shuffle partitions scale with parallelism; on a real cluster this is
   set to ~2-3x total cores (or left to AQE's coalescing with a high
   initial count).
+- Python workers fork from ``worker_daemon``, which stops every task
+  from re-reading the unchanged ``pyspark.zip`` directory; the package
+  root leads the workers' ``PYTHONPATH`` so the daemon imports from any
+  working directory.
 """
 
 from __future__ import annotations
@@ -24,6 +28,16 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_ARROW_BATCH = 4096
+DAEMON_MODULE = "legal_knowledge_graph_spark.worker_daemon"
+# the directory (or zip) holding the package; every session master is
+# local, so the executors see the driver's paths
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _worker_python_path(caller: str | None) -> str:
+    """The package root, then the caller's entries in their order."""
+    rest = [p for p in (caller or "").split(os.pathsep) if p and p != PACKAGE_ROOT]
+    return os.pathsep.join([PACKAGE_ROOT, *rest])
 
 
 def get_spark(
@@ -76,9 +90,13 @@ def get_spark(
         # (the round-6 intermittent worker deaths were undiagnosable
         # without it); negligible steady-state cost
         .config("spark.python.worker.faulthandler.enabled", "true")
+        .config("spark.python.daemon.module", DAEMON_MODULE)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, str(v))
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = _worker_python_path(
+        conf.get("spark.executorEnv.PYTHONPATH")
+    )
+    for k, v in conf.items():
+        builder = builder.config(k, str(v))
     return builder.getOrCreate()

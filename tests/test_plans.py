@@ -199,3 +199,63 @@ def test_repartition_buckets_balanced_one_slot_per_bucket(spark):
     assert len(per_part) == 32
     assert out.count() == 3200
     assert out.select(F.sum("k")).first()[0] == sum(range(3200))
+
+
+def test_slot_keys_fill_every_slot_at_4096():
+    """One capped scan finds, for every bucket, the smallest key that
+    hashes into its slot, up to 4096 slots."""
+    from legal_knowledge_graph_spark.functions.partitioning import _slot_keys, murmur3_int32
+
+    for n, n_buckets in [(4096, 4096), (4096, 64), (64, 64)]:
+        keys = _slot_keys(n, n_buckets)
+        assert keys is not None and len(keys) == n_buckets
+        first = {}
+        for x in range(max(keys) + 1):
+            first.setdefault(murmur3_int32(x) % n, x)
+        assert keys == tuple(first[b * n // n_buckets] for b in range(n_buckets))
+
+
+def test_repartition_buckets_balanced_falls_back_when_scan_capped(spark, monkeypatch):
+    from legal_knowledge_graph_spark.functions import partitioning
+
+    monkeypatch.setattr(partitioning, "_slot_keys", lambda n, n_buckets: None)
+    df = spark.range(320).select(
+        F.col("id").alias("k"), (F.col("id") % 32).cast("int").alias("bucket")
+    )
+    out = partitioning.repartition_buckets_balanced(df, "bucket", 32)
+    assert re.search(r"hashpartitioning\(bucket#\d+, \d+\)", _optimized(out))
+    assert out.count() == 320
+
+
+def test_attach_vectors_embeds_non_entity_rows_only(spark):
+    """Each non-Entity row's vector is its own summary-else-content
+    embedding, whatever rows share its batch; Entity rows get null."""
+    import numpy as np
+
+    from legal_knowledge_graph_spark.operators.materialize import attach_vectors
+    from legal_knowledge_graph_spark.operators.summarize import embed_texts_np
+
+    rows = [
+        (f"n{i}", label, summary, content)
+        for i, (label, summary, content) in enumerate(
+            [
+                ("Chunk", None, "the court held the appeal"),
+                ("Entity", None, "Supreme Court"),
+                ("Corpus", "a statute summary", "body text"),
+                ("Entity", "x", "y"),
+                ("Chunk", "", ""),
+                ("Chunk", None, "appeal held court the the"),
+            ]
+        )
+    ]
+    nodes = spark.createDataFrame(
+        rows, "node_id string, label string, summary string, content string"
+    ).withColumn("vector", F.lit(None).cast("array<float>"))
+    got = {r["node_id"]: r["vector"] for r in attach_vectors(nodes, dim=16).collect()}
+    for node_id, label, summary, content in rows:
+        if label == "Entity":
+            assert got[node_id] is None
+        else:
+            text = summary if summary and summary.strip() else content
+            want = embed_texts_np([text], 16)[0]
+            assert np.array_equal(np.asarray(got[node_id], dtype=np.float32), want)
