@@ -1,17 +1,17 @@
 """CPU seconds each Python task costs before it touches a row.
 
-    python3 tools/py_task_cost.py [--reps 5] [--rows-per-task 1000]
+    python3 tools/py_task_cost.py
 
 One local session from ``session.get_spark`` (the engine's settings,
 its Python worker daemon included) on every core this process may use
 runs three jobs over ``spark.range`` into the ``noop`` sink, at 8 and
-at 32 partitions:
+at 32 partitions, ``ROWS_PER_TASK`` rows per partition:
 
 - ``jvm``: the range alone, no Python;
 - ``mapInPandas``: an identity ``mapInPandas``;
 - ``mapInArrow``: an identity ``mapInArrow``.
 
-Each job runs once untimed, then ``--reps`` times; the cheapest CPU
+Each job runs once untimed, then ``REPS`` times; the cheapest CPU
 time of the whole process tree (driver, JVM, Python workers; the same
 count as perfbench's ``batch_cpu_s``) is kept. A Python job's cost per
 task is its CPU time minus the ``jvm`` job's at the same partition
@@ -21,7 +21,6 @@ one JSON object.
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import sys
@@ -33,10 +32,12 @@ sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 from run import tree_cpu_s  # noqa: E402
 
 PARTITIONS = (8, 32)
+REPS = 5
+ROWS_PER_TASK = 1000
 
 
-def _jobs(spark, parts: int, rows: int) -> dict:
-    df = spark.range(0, parts * rows, numPartitions=parts)
+def _jobs(spark, parts: int) -> dict:
+    df = spark.range(0, parts * ROWS_PER_TASK, numPartitions=parts)
 
     def identity(batches):
         yield from batches
@@ -48,22 +49,17 @@ def _jobs(spark, parts: int, rows: int) -> dict:
     }
 
 
-def _cpu_s(df, reps: int) -> float:
+def _cpu_s(df) -> float:
     df.write.format("noop").mode("overwrite").save()
     best = float("inf")
-    for _ in range(reps):
+    for _ in range(REPS):
         t0 = tree_cpu_s()
         df.write.format("noop").mode("overwrite").save()
         best = min(best, tree_cpu_s() - t0)
     return best
 
 
-def main(argv=None) -> int:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--reps", type=int, default=5)
-    ap.add_argument("--rows-per-task", type=int, default=1000)
-    args = ap.parse_args(argv)
-
+def main() -> int:
     from legal_knowledge_graph_spark.session import get_spark
 
     cores = len(os.sched_getaffinity(0))
@@ -75,11 +71,11 @@ def main(argv=None) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     table = {}
     try:
-        print(f"cores={cores} reps={args.reps} rows/task={args.rows_per_task}")
+        print(f"cores={cores} reps={REPS} rows/task={ROWS_PER_TASK}")
         print(f"{'partitions':>10} {'job':>12} {'cpu_s':>8} {'py_cpu_s/task':>14}")
         for parts in PARTITIONS:
-            jobs = _jobs(spark, parts, args.rows_per_task)
-            cpu = {name: _cpu_s(df, args.reps) for name, df in jobs.items()}
+            jobs = _jobs(spark, parts)
+            cpu = {name: _cpu_s(df) for name, df in jobs.items()}
             for name, c in cpu.items():
                 row = table[f"{name}@{parts}"] = {"cpu_s": round(c, 3)}
                 shown = ""
