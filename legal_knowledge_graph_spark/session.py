@@ -19,6 +19,8 @@ is the one you would set on a real 1000-executor cluster:
   from re-reading the unchanged ``pyspark.zip`` directory; the package
   root leads the workers' ``PYTHONPATH`` so the daemon imports from any
   working directory.
+- the driver JVM runs one C1 and one C2 JIT compiler thread
+  (``JVM_OPTIONS``); see the constant for why.
 """
 
 from __future__ import annotations
@@ -32,6 +34,16 @@ DAEMON_MODULE = "legal_knowledge_graph_spark.worker_daemon"
 # the directory (or zip) holding the package; every session master is
 # local, so the executors see the driver's paths
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# HotSpot gives a 4-vCPU box three JIT compiler threads, two of them C2.
+# Warm Spark jobs keep crossing compile thresholds for a long time
+# (2,000-3,000 compiles per pass of perfbench's operator suite after
+# its warm-up pass), and with two C2 threads that compile CPU was
+# large and fell pass by pass: the first timed pass cost 12.7-14.1
+# CPU-s and the next 2.9-3.6 s less. With one C2 thread: 11.9-12.4
+# CPU-s, then 0.8-1.6 s less (4-vCPU Xeon VM, three seeds each).
+# Spark prepends ``spark.driver.defaultJavaOptions`` to the caller's
+# ``spark.driver.extraJavaOptions``, so both apply.
+JVM_OPTIONS = "-XX:CICompilerCount=2"
 
 
 def _worker_python_path(caller: str | None) -> str:
@@ -91,6 +103,7 @@ def get_spark(
         # without it); negligible steady-state cost
         .config("spark.python.worker.faulthandler.enabled", "true")
         .config("spark.python.daemon.module", DAEMON_MODULE)
+        .config("spark.driver.defaultJavaOptions", JVM_OPTIONS)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
     )
     conf = dict(extra_conf or {})

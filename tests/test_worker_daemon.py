@@ -1,5 +1,6 @@
 """The engine's Python worker daemon: unchanged zip archives are not
-re-read per task, changed and newly added ones still import."""
+re-read per task, changed and newly added ones still import. Also the
+driver JVM options ``get_spark`` sets beside it."""
 
 from __future__ import annotations
 
@@ -93,6 +94,13 @@ def test_session_runs_workers_from_engine_daemon(spark):
     rows = spark.range(16, numPartitions=16).mapInPandas(report, "m string").collect()
     want = worker_daemon.__name__ if worker_daemon.NEEDED else "zipimport"
     assert [r["m"] for r in rows] == [want] * 16
+
+
+def test_driver_jvm_runs_engine_options(spark):
+    jvm = spark.sparkContext._jvm
+    args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+    for opt in session.JVM_OPTIONS.split():
+        assert opt in args
 
 
 def test_py_file_added_mid_session_imports_in_udf(spark, tmp_path):
