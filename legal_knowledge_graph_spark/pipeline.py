@@ -113,8 +113,11 @@ def run_pipeline(
     # absolute_chunks joins the chunk tree back to the extracted pages
     # (span re-basing) and feeds BOTH the nodes and edges stages; the
     # lazy checkpoint materializes that join once instead of once per
-    # consumer. On resume (both stages committed) it is never computed.
-    chunks_abs = absolute_chunks(chunks_sum, extracted).localCheckpoint(eager=False)
+    # consumer. Under AQE even a lazy localCheckpoint runs its job when
+    # created, so it is built only when one of its consumers will be
+    # computed: a reopen of a committed workdir runs no Spark job.
+    if force or not (cat.committed("nodes") and cat.committed("edges")):
+        chunks_abs = absolute_chunks(chunks_sum, extracted).localCheckpoint(eager=False)
 
     def _nodes() -> DataFrame:
         doc_sum = document_summaries(chunks_sum)

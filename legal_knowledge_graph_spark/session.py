@@ -20,7 +20,8 @@ is the one you would set on a real 1000-executor cluster:
   root leads the workers' ``PYTHONPATH`` so the daemon imports from any
   working directory.
 - the driver JVM runs one C1 and one C2 JIT compiler thread
-  (``JVM_OPTIONS``); see the constant for why.
+  (``JVM_OPTIONS``), and the generated-code cache holds a build's
+  plans (``CODEGEN_CACHE_ENTRIES``); see the constants for why.
 """
 
 from __future__ import annotations
@@ -44,6 +45,13 @@ PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Spark prepends ``spark.driver.defaultJavaOptions`` to the caller's
 # ``spark.driver.extraJavaOptions``, so both apply.
 JVM_OPTIONS = "-XX:CICompilerCount=2"
+# Entries of Spark's generated-code cache (a static conf, default 100).
+# One build's plans need more classes than that, so a warm 500-page
+# build evicted and recompiled them: 247 Janino compiles, each also a
+# fresh class for the JIT. With 2000 entries it makes 18, and the
+# build's JIT compiler threads used 13-14 instead of 17 CPU-s
+# (``tools/build_cpu_split.py``, 4-vCPU Xeon VM).
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def _worker_python_path(caller: str | None) -> str:
@@ -104,6 +112,7 @@ def get_spark(
         .config("spark.python.worker.faulthandler.enabled", "true")
         .config("spark.python.daemon.module", DAEMON_MODULE)
         .config("spark.driver.defaultJavaOptions", JVM_OPTIONS)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
     )
     conf = dict(extra_conf or {})

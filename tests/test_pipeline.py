@@ -8,23 +8,64 @@
 - Resume: delete the last stages' checkpoints, rerun, assert the
   surviving stages were NOT recomputed (lineage rows don't grow) and
   the final tables are identical.
+- Commit files: each stage's stored schema is the one a parquet read
+  infers, a reopen runs no Spark job, the lineage flush matches the
+  committed tables in at most two jobs, and a zero-page input commits
+  and reopens every stage.
 """
 
 from __future__ import annotations
 
 import glob
+import itertools
+import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
 from legal_knowledge_graph_spark.datagen import (
+    PAGES_SCHEMA,
     alias_table,
     generate_golden_triples,
     generate_pages,
 )
-from legal_knowledge_graph_spark.pipeline import run_pipeline
+from legal_knowledge_graph_spark.operators.checkpoint import StageCatalog
+from legal_knowledge_graph_spark.pipeline import STAGES, run_pipeline
 
 N = 120
+_GROUPS = itertools.count()
+
+
+def _jobs(sc, fn):
+    """``fn()`` and the number of Spark jobs it ran (in its own job
+    group)."""
+    group = f"test-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def built40(spark, tmp_path_factory):
+    """A 40-page build's workdir and the job count of each lineage
+    flush it ran."""
+    wd = str(tmp_path_factory.mktemp("built40"))
+    flush_jobs = []
+    flush = StageCatalog.flush_lineage
+
+    def counted(cat):
+        flush_jobs.append(_jobs(spark.sparkContext, lambda: flush(cat))[1])
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(StageCatalog, "flush_lineage", counted)
+        run_pipeline(spark, generate_pages(spark, 40), wd)
+    return wd, flush_jobs
 
 
 def _table_fingerprint(df):
@@ -113,12 +154,11 @@ def test_pipeline_resume(spark, tmp_path):
 
 
 def test_resume_survives_mid_write_kill(spark, tmp_path):
-    """Crash-consistency of the _SUCCESS-marker commit protocol: a
-    stage directory left by a KILLED write (partial/corrupt parquet
-    files, NO _SUCCESS) must be treated as uncommitted — recomputed and
-    overwritten — and the final tables must equal a clean run's."""
-    import os
-
+    """Crash-consistency of the commit protocol (``_SUCCESS``, then
+    ``_schema.json``): a stage directory left by a KILLED write
+    (partial/corrupt parquet files, NO _SUCCESS) must be treated as
+    uncommitted — recomputed and overwritten — and the final tables
+    must equal a clean run's."""
     wd = str(tmp_path / "crash")
     pages = generate_pages(spark, 40)
     out1 = run_pipeline(spark, pages, wd)
@@ -149,6 +189,19 @@ def test_resume_survives_mid_write_kill(spark, tmp_path):
         _table_fingerprint(out2["chunks_summarized"])
     )
 
+    # a kill between the parquet commit and the schema file: _SUCCESS
+    # present, _schema.json missing — not committed, so recomputed
+    def edge_commits():
+        lineage = spark.read.parquet(f"{wd}/_lineage")
+        return lineage.where(F.col("stage") == "edges").select("committed_at").distinct().count()
+
+    commits = edge_commits()
+    os.remove(f"{wd}/edges/_schema.json")
+    out3 = run_pipeline(spark, pages, wd)
+    assert os.path.exists(f"{wd}/edges/_schema.json")
+    assert edge_commits() == commits + 1
+    assert tuple(_table_fingerprint(out3["edges"])) == tuple(fp_edges)
+
 
 def test_checkpoint_files_bucketed(spark, tmp_path):
     wd = str(tmp_path / "bk")
@@ -157,3 +210,70 @@ def test_checkpoint_files_bucketed(spark, tmp_path):
     # equivalent): directory-per-bucket layout
     assert glob.glob(f"{wd}/nodes/bucket=*"), "nodes not bucket-partitioned"
     assert glob.glob(f"{wd}/edges/bucket=*"), "edges not bucket-partitioned"
+
+
+def test_stored_schemas_match_inference(spark, built40):
+    wd, _ = built40
+    cat = StageCatalog(spark, wd)
+    for stage in STAGES:
+        assert cat.schema(stage) == spark.read.parquet(cat.path(stage)).schema, stage
+    for stage in ("nodes", "edges"):
+        last = cat.schema(stage).fields[-1]
+        assert (last.name, last.dataType) == ("bucket", IntegerType()), stage
+
+
+def test_reopen_runs_no_spark_jobs(spark, built40):
+    """A committed workdir reopens without a schema-inference read or
+    the nodes/edges input checkpoint: zero Spark jobs."""
+    wd, _ = built40
+    pages = generate_pages(spark, 40)
+    out, jobs = _jobs(spark.sparkContext, lambda: run_pipeline(spark, pages, wd))
+    assert jobs == 0
+    assert out["nodes"].count() > 0
+
+
+def test_lineage_matches_committed_tables(spark, built40):
+    """The one-shuffle flush writes, per stage and file partition, the
+    row count and first-column fingerprint of the committed table."""
+    wd, flush_jobs = built40
+    assert len(flush_jobs) == 1 and flush_jobs[0] <= 2, flush_jobs
+    got = sorted(
+        tuple(r)
+        for r in spark.read.parquet(f"{wd}/_lineage").drop("committed_at").collect()
+    )
+    want = []
+    for stage in STAGES:
+        table = spark.read.parquet(f"{wd}/{stage}")
+        want += [
+            (stage, *r)
+            for r in table.groupBy(F.spark_partition_id().alias("pid"))
+            .agg(
+                F.count(F.lit(1)),
+                F.coalesce(F.bit_xor(F.xxhash64(table.columns[0])), F.lit(0)),
+            )
+            .collect()
+        ]
+    assert got == sorted(want)
+
+
+def test_zero_page_build(spark, tmp_path):
+    """Empty input: every stage commits, reads back empty with its
+    stored schema, and a rerun reads all 9 stages."""
+    wd = str(tmp_path / "empty")
+    pages = spark.createDataFrame([], PAGES_SCHEMA)
+    out = run_pipeline(spark, pages, wd)
+    cat = StageCatalog(spark, wd)
+    for stage in STAGES:
+        assert cat.committed(stage), stage
+        assert out[stage].schema == cat.schema(stage), stage
+        assert out[stage].count() == 0, stage
+    markers = {s: os.stat(f"{wd}/{s}/_SUCCESS").st_mtime_ns for s in STAGES}
+    lineage_rows = cat.lineage().count()
+
+    out2, jobs = _jobs(spark.sparkContext, lambda: run_pipeline(spark, pages, wd))
+    assert jobs == 0
+    assert {s: os.stat(f"{wd}/{s}/_SUCCESS").st_mtime_ns for s in STAGES} == markers
+    assert cat.lineage().count() == lineage_rows
+    for stage in STAGES:
+        assert out2[stage].schema == cat.schema(stage), stage
+        assert out2[stage].count() == 0, stage
