@@ -1,7 +1,6 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Five tiers, all pure DataFrame ops (JVM-side, codegen'd — no Python in
-any hot path):
+Five tiers:
 
 - **exact**: md5-groupBy on normalized text.
 - **MinHash + LSH**: char-3-gram shingles -> per-permutation min of
@@ -15,6 +14,22 @@ any hot path):
 - **embedding cosine**: exact near-dup pairs above a cosine threshold
   (brute force within blocks; the LSH-bucketed scale path is in
   operators/similarity.py).
+
+Each Jaccard tier (MinHash, n-gram) has exactly two physical paths,
+chosen by one guard, :func:`_fast_stats`:
+
+- **fast path**: k <= 3, a bounded gram vocabulary and doc count, and
+  unique ids. One Arrow pass packs each doc's grams into a bitmask
+  (plus its minhash signature); the masks broadcast, and candidate
+  pairs are enumerated and verified inside each band bucket / block
+  task, so no O(pairs) table crosses an exchange.
+- **fallback**: the distributed shingle path — explode, JVM-side
+  signatures and band self-join, shuffle-join :func:`jaccard_verify`.
+  It is the unbounded-vocab / 100 TB shape, and it also takes repeated
+  ids: a repeated id's gram rows add up there exactly as in the DuckDB
+  oracles, which a per-id bitmask cannot express.
+
+Both paths give identical rows for unique ids.
 
 Scale notes:
 - every pairwise tier blocks first (LSH bands / explicit key); the
@@ -35,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from legal_knowledge_graph_spark.functions.partitioning import ensure_parallel
+
 DEFAULT_MINHASH_PERMS = 16
 DEFAULT_BANDS = 4  # rows_per_band = perms // bands; 4x4 => band
 # collision prob = sim^4: at jaccard 0.9 a dup pair is missed with prob
@@ -44,19 +61,16 @@ DEFAULT_JACCARD_THRESHOLD = 0.8
 DEFAULT_COSINE_THRESHOLD = 0.8
 DEFAULT_MAX_BLOCK = 1000
 SIMHASH_BITS = 32
+# Jaccard fast-path bounds (checked by _fast_stats): distinct grams,
+# docs, and bytes of the broadcast doc x vocab mask matrix
+MAX_VOCAB = 1 << 16
+MAX_DOCS = 1_000_000
+MAX_MASK_BYTES = 1 << 28
+NGRAM_CHUNK = 192  # block rows per n-gram verify unit
 
 
 def _norm_text(col: Column) -> Column:
     return F.lower(F.trim(col))
-
-
-def _ensure_parallel(df: DataFrame) -> DataFrame:
-    """Repartition iff the input is under-partitioned — shared helper
-    (functions/partitioning.py since round 6); kept under this name
-    because callers and docs reference dedup._ensure_parallel."""
-    from legal_knowledge_graph_spark.functions.partitioning import ensure_parallel
-
-    return ensure_parallel(df)
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -134,16 +148,47 @@ def minhash_signatures(
     return hashed.groupBy("doc_id").agg(*aggs)
 
 
+def _band_keys(n_perm: int, bands: int) -> Column:
+    """Exploding ``band_key`` column for a signature table: one row per
+    band, "b|h..|h.." over that band's signature rows. The DuckDB
+    oracle builds the same strings."""
+    rpb = n_perm // bands
+    return F.explode(
+        F.array(
+            *[
+                F.concat_ws(
+                    "|", F.lit(str(b)), *[F.col(f"h{b * rpb + r}") for r in range(rpb)]
+                )
+                for b in range(bands)
+            ]
+        )
+    ).alias("band_key")
+
+
+def _count_dropped(sizes: DataFrame, max_block: int, metrics: dict) -> None:
+    """Record the buckets above ``max_block`` of a (band_key, bs) table
+    (one eager action) as ``dropped_buckets`` / ``dropped_rows``."""
+    dropped = (
+        sizes.where(F.col("bs") > max_block)
+        .agg(
+            F.count(F.lit(1)).alias("nb"),
+            F.coalesce(F.sum("bs"), F.lit(0)).alias("nr"),
+        )
+        .first()
+    )
+    metrics["dropped_buckets"] = int(dropped["nb"])
+    metrics["dropped_rows"] = int(dropped["nr"])
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame,
     n_perm: int = DEFAULT_MINHASH_PERMS,
     bands: int = DEFAULT_BANDS,
     max_block: int = DEFAULT_MAX_BLOCK,
     metrics: dict | None = None,
-    distinct: bool = True,
 ) -> DataFrame:
     """Banded LSH: pair (a, b) is a candidate iff some band's rows all
-    agree. Returns (doc_a, doc_b), doc_a < doc_b.
+    agree. Returns distinct (doc_a, doc_b), doc_a < doc_b.
 
     Band buckets larger than ``max_block`` are excluded from the
     self-join (a stop-text bucket of B members would emit B^2 pairs).
@@ -154,45 +199,21 @@ def lsh_candidate_pairs(
     banding lineage instead of running it twice. The DuckDB oracle in
     entry_queries._sql_minhash applies the same cap, so the gate stays
     exact under capping."""
-    rpb = n_perm // bands
-    band_keys = [
-        F.concat_ws(
-            "|", F.lit(str(b)), *[F.col(f"h{b * rpb + r}") for r in range(rpb)]
-        )
-        for b in range(bands)
-    ]
     return _banded_pairs(
-        sigs.select("doc_id", F.explode(F.array(*band_keys)).alias("band_key")),
-        max_block,
-        metrics,
-        distinct,
+        sigs.select("doc_id", _band_keys(n_perm, bands)), max_block, metrics
     )
 
 
-def _banded_pairs(
-    banded: DataFrame,
-    max_block: int,
-    metrics: dict | None,
-    distinct: bool = True,
-) -> DataFrame:
+def _banded_pairs(banded: DataFrame, max_block: int, metrics: dict | None) -> DataFrame:
     if metrics is not None:
-        # the metrics .first() below is an EAGER action; checkpoint so
-        # it doesn't execute the signature lineage separately from the
+        # the metrics count is an EAGER action; checkpoint so it
+        # doesn't execute the signature lineage separately from the
         # self-join's execution (ADVICE round 2: metrics must not
         # double the signature-stage work)
         banded = banded.localCheckpoint(eager=False)
     sizes = banded.groupBy("band_key").agg(F.count(F.lit(1)).alias("bs"))
     if metrics is not None:
-        dropped = (
-            sizes.where(F.col("bs") > max_block)
-            .agg(
-                F.count(F.lit(1)).alias("nb"),
-                F.coalesce(F.sum("bs"), F.lit(0)).alias("nr"),
-            )
-            .first()
-        )
-        metrics["dropped_buckets"] = int(dropped["nb"])
-        metrics["dropped_rows"] = int(dropped["nr"])
+        _count_dropped(sizes, max_block, metrics)
     # Cap via ANTI-join on the oversized-key set: the previous inner
     # join on band_key forced a full shuffle of the banded table just
     # to apply the cap, and the self-join below shuffles it by
@@ -210,213 +231,13 @@ def _banded_pairs(
     banded = banded.join(oversized, "band_key", "left_anti")
     a = banded.select("band_key", F.col("doc_id").alias("doc_a"))
     b = banded.select("band_key", F.col("doc_id").alias("doc_b"))
-    pairs = (
+    # a pair agreeing in several bands is joined once per band
+    return (
         a.join(b, "band_key")
         .where(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
+        .distinct()
     )
-    # ``distinct=False`` callers dedupe AFTER the (idempotent) verify:
-    # a pair agreeing in k bands appears k times here, but verifying it
-    # k times yields k identical rows, so the distinct moves to the
-    # tiny verified output instead of shuffling the full candidate
-    # flood (the multi-band duplication factor is small — bounded by
-    # ``bands``).
-    return pairs.distinct() if distinct else pairs
-
-
-def jaccard_verify_bitset(
-    sh: DataFrame,
-    pairs: DataFrame,
-    max_vocab: int = 1 << 16,
-    max_docs: int = 1_000_000,
-    max_mask_bytes: int = 1 << 28,
-) -> DataFrame | None:
-    """Exact Jaccard verify via broadcast **bitset popcounts** — same
-    values as :func:`jaccard_verify`, different physical plan.
-
-    When the distinct-gram vocabulary is small (char-3-grams over a
-    bounded alphabet: a few hundred to tens of thousands), every doc's
-    shingle set packs into a V-bit mask (V/8 bytes). The mask table
-    broadcasts, and each Arrow batch of candidate pairs computes
-    intersection sizes as vectorized popcount(A & B).
-
-    Bound discipline (the driver is protected BEFORE anything large
-    moves to it): the vocab is collected under a ``limit(max_vocab +
-    1)`` (bounded by construction); partial masks are built per input
-    partition (numpy-vectorized bit-sets, NO shuffle of the gram
-    table) and checkpointed executor-side; ONE cheap ``count()`` then
-    bounds the exact bytes the collect would move
-    (``n_partials * mask_bytes`` vs ``max_mask_bytes``, dim-aware:
-    256 MB default) before anything reaches the driver, where partials
-    are OR-merged (a doc's grams sit in one partition after the narrow
-    shingle explode, so partials ~= docs; a shuffled upstream inflates
-    the count and the same guard catches it). Returns None when any
-    bound is exceeded (caller falls back to the shuffle-join
-    :func:`jaccard_verify`, the 100-TB-scale path).
-    """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    vocab_rows = sh.select("gram").distinct().limit(max_vocab + 1).collect()
-    if len(vocab_rows) > max_vocab:
-        return None
-    gram_idx = {g: i for i, g in enumerate(sorted(r["gram"] for r in vocab_rows))}
-    nbytes = (len(gram_idx) + 7) // 8
-
-    spark = sh.sparkSession
-    b_idx = spark.sparkContext.broadcast(gram_idx)
-
-    mask_schema = T.StructType(
-        [
-            sh.schema["doc_id"],
-            T.StructField("mask", T.BinaryType(), False),
-        ]
-    )
-
-    def build_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = b_idx.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = pdf["gram"].map(idx).to_numpy(dtype="int64")
-            docs = pdf["doc_id"].to_numpy()
-            order = np.argsort(docs, kind="stable")
-            docs_s, codes_s = docs[order], codes[order]
-            bounds = np.flatnonzero(np.r_[True, docs_s[1:] != docs_s[:-1]])
-            out_docs, out_masks = [], []
-            for i, start in enumerate(bounds):
-                end = bounds[i + 1] if i + 1 < len(bounds) else len(docs_s)
-                m = np.zeros(nbytes, dtype=np.uint8)
-                c = codes_s[start:end]
-                np.bitwise_or.at(m, c >> 3, (1 << (c & 7)).astype(np.uint8))
-                out_docs.append(docs_s[start])
-                out_masks.append(m.tobytes())
-            yield pd.DataFrame({"doc_id": out_docs, "mask": out_masks})
-
-    # executor-side materialization first, THEN the bound check, THEN
-    # the driver collect — nothing unbounded ever reaches the driver.
-    # (A round-5 attempt to fuse these into one `limit(cap+1).collect()`
-    # was reverted: CollectLimit ships up to cap+1 rows FROM EACH
-    # partition of a wave before truncating, so in the overflow case
-    # the driver could buffer far more than cap rows — the count guard
-    # is the only shape that bounds bytes before anything moves.)
-    partials = sh.mapInPandas(build_partials, mask_schema).localCheckpoint(eager=False)
-    n_partials = partials.count()
-    if n_partials > max_docs or n_partials * nbytes > max_mask_bytes:
-        return None
-    mask_rows = partials.collect()
-
-    # OR-merge partials into ONE contiguous (n_docs x words) uint64
-    # matrix + id->row map: per-batch mask gathers become fancy
-    # indexing (no per-row dict lookups / np.stack), and popcount runs
-    # SWAR on uint64 words — 8x fewer elements than a uint8 gather.
-    nwords = (nbytes + 7) // 8
-    row_of: dict = {}
-    M = np.zeros((n_partials, nwords * 8), dtype=np.uint8)
-    n_docs = 0
-    for r in mask_rows:
-        i = row_of.get(r["doc_id"])
-        if i is None:
-            i = row_of[r["doc_id"]] = n_docs
-            n_docs += 1
-        m = np.frombuffer(r["mask"], dtype=np.uint8)
-        M[i, : len(m)] |= m
-    M = M[:n_docs]
-    M64 = M.view(np.uint64)
-
-    c55 = np.uint64(0x5555555555555555)
-    c33 = np.uint64(0x3333333333333333)
-    c0F = np.uint64(0x0F0F0F0F0F0F0F0F)
-    c01 = np.uint64(0x0101010101010101)
-    one, two, four, s56 = np.uint64(1), np.uint64(2), np.uint64(4), np.uint64(56)
-
-    def _popcount_rows(x: "np.ndarray") -> "np.ndarray":
-        x = x - ((x >> one) & c55)
-        x = (x & c33) + ((x >> two) & c33)
-        x = (x + (x >> four)) & c0F
-        return ((x * c01) >> s56).sum(axis=1).astype("int64")
-
-    # per-doc set sizes = mask popcounts, computed ONCE at build time:
-    # union then comes from |A| + |B| - |A&B|, so the per-pair hot path
-    # popcounts only the intersection — half the SWAR work and no A|B
-    # temporary allocation.
-    row_sizes = _popcount_rows(M64)
-
-    # id -> mask-row mapping: for integer ids, a sorted array +
-    # searchsorted (fully vectorized) replaces the pandas .map(dict)
-    # per-pair lookup — at ~1 us/lookup the dict path cost seconds on
-    # a 1M-pair candidate flood. Non-integer ids keep the dict path.
-    ids_arr = np.array(list(row_of.keys()))
-    int_ids = ids_arr.dtype.kind in "iu"
-    if int_ids:
-        sort_order = np.argsort(ids_arr, kind="stable")
-        sorted_ids = ids_arr[sort_order]
-        sorted_rows = np.fromiter(
-            (row_of[i] for i in ids_arr[sort_order]), dtype="int64", count=len(ids_arr)
-        )
-        b_map = spark.sparkContext.broadcast((sorted_ids, sorted_rows))
-    else:
-        b_map = spark.sparkContext.broadcast(row_of)
-    b_M = spark.sparkContext.broadcast(M64)
-    b_sz = spark.sparkContext.broadcast(row_sizes)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_a", sh.schema["doc_id"].dataType, False),
-            T.StructField("doc_b", sh.schema["doc_id"].dataType, False),
-            T.StructField("inter_size", T.LongType(), False),
-            T.StructField("union_size", T.LongType(), False),
-        ]
-    )
-
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        MM, mapping, SZ = b_M.value, b_map.value, b_sz.value
-        if int_ids:
-            s_ids, s_rows = mapping
-
-            def to_rows(col: "pd.Series") -> "np.ndarray":
-                vals = col.to_numpy()
-                idx = np.searchsorted(s_ids, vals)
-                # searchsorted returns an INSERTION index for absent
-                # ids — clip + verify so an id missing from the mask
-                # table fails loudly (like the dict path did) instead
-                # of silently reading another document's mask
-                idx = np.minimum(idx, len(s_ids) - 1)
-                if not np.array_equal(s_ids[idx], vals):
-                    missing = vals[s_ids[idx] != vals][:5]
-                    raise KeyError(
-                        f"pair ids absent from the shingle table: {missing!r}"
-                    )
-                return s_rows[idx]
-
-        else:
-
-            def to_rows(col: "pd.Series") -> "np.ndarray":
-                return col.map(mapping).to_numpy(dtype="int64")
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame(columns=["doc_a", "doc_b", "inter_size", "union_size"])
-                continue
-            ia = to_rows(pdf["doc_a"])
-            ib = to_rows(pdf["doc_b"])
-            A, B = MM[ia], MM[ib]
-            inter = _popcount_rows(A & B)
-            union = SZ[ia] + SZ[ib] - inter
-            yield pd.DataFrame(
-                {
-                    "doc_a": pdf["doc_a"],
-                    "doc_b": pdf["doc_b"],
-                    "inter_size": inter,
-                    "union_size": union,
-                }
-            )
-
-    return pairs.mapInPandas(verify, out_schema)
 
 
 def jaccard_verify(sh: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -447,15 +268,14 @@ def jaccard_verify(sh: DataFrame, pairs: DataFrame) -> DataFrame:
 
 
 # ------------------------------------------------------------------
-# round-6 bounded-vocab Arrow fast path (guide §4.2 / §8)
+# bounded-vocab Arrow fast path of the Jaccard tiers (guide §4.2 / §8)
 #
 # The distributed shingle machinery above processes ~len(text) rows
 # per doc through an explode, an md5 per (doc, gram), a 16-agg
 # groupBy, a band self-join and a pair-table shuffle — at bench scale
 # that is 7.2M exploded rows and an 11M-row candidate flood for a
 # corpus whose TEXT is 15 MB. When the gram vocabulary is bounded
-# (char-k-grams over a bounded alphabet — the same condition the
-# bitset verify already requires), every per-doc quantity the tier
+# (char-k-grams over a bounded alphabet), every per-doc quantity the tier
 # needs (distinct-gram bitmask, set size, minhash signature) is
 # computable in ONE vectorized Arrow pass over the normalized text,
 # and candidate pairs can be enumerated INSIDE each band bucket / each
@@ -468,9 +288,9 @@ def jaccard_verify(sh: DataFrame, pairs: DataFrame) -> DataFrame:
 # md5 -> int -> mod-P -> (a*g+b) mod P signature arithmetic is the
 # same integer math (int64, no overflow: a, g < 2^31); masks index a
 # GLOBAL sorted vocab so popcount(A & B) is exactly |A ∩ B|. The
-# DuckDB oracles are unchanged and stay green. Unbounded-vocab /
-# oversized corpora fall back to the distributed path above (the
-# 100 TB shape).
+# DuckDB oracles are unchanged and stay green. _fast_stats is the one
+# guard: k > 3, an unbounded vocab, an oversized corpus or repeated
+# ids fall back to the distributed path above (the 100 TB shape).
 
 
 def _gram_set(t: str, k: int) -> set:
@@ -558,7 +378,7 @@ def _norm_docs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def _packed_grams_table(norm_docs: DataFrame, k: int) -> DataFrame:
     """(doc_id, codes array<long>): per-doc DISTINCT packed grams
     (k <= 3) in one Arrow pass over the normalized text. Checkpointed
-    by callers so the text is gram-extracted exactly ONCE — the
+    by _fast_stats so the text is gram-extracted exactly ONCE — the
     vocabulary collect and the mask/signature stats pass both read the
     cached codes instead of re-deriving grams from text."""
     from typing import Iterator
@@ -595,9 +415,9 @@ def _packed_grams_table(norm_docs: DataFrame, k: int) -> DataFrame:
     return norm_docs.mapInArrow(run, schema)
 
 
-def _collect_code_vocab(grams: DataFrame, max_vocab: int):
+def _collect_code_vocab(grams: DataFrame):
     """Global sorted packed-gram vocabulary (np.int64 array) from the
-    codes table, or None above ``max_vocab``. Tasks emit their own
+    codes table, or None above ``MAX_VOCAB``. Tasks emit their own
     distinct codes (bounded by the vocab size, not the corpus), so the
     driver collect is bounded by construction."""
     import numpy as np
@@ -610,12 +430,12 @@ def _collect_code_vocab(grams: DataFrame, max_vocab: int):
             u = np.unique(flat.to_numpy(zero_copy_only=False))
             acc = u if acc is None else np.union1d(acc, u)
         if acc is not None and len(acc):
-            if len(acc) > max_vocab:
+            if len(acc) > MAX_VOCAB:
                 # this task alone proves the vocab is over budget:
-                # max_vocab+1 distinct codes are enough to trip the
+                # MAX_VOCAB+1 distinct codes are enough to trip the
                 # global guard, and truncating bounds what the shuffle
                 # and driver ever see on unbounded-vocab corpora
-                acc = acc[: max_vocab + 1]
+                acc = acc[: MAX_VOCAB + 1]
             yield pa.RecordBatch.from_arrays(
                 [pa.array(acc, type=pa.int64())], names=["gram"]
             )
@@ -625,14 +445,14 @@ def _collect_code_vocab(grams: DataFrame, max_vocab: int):
     # scheduled 1-then-4x incremental waves (serial jobs) and shipped
     # up to limit rows PER PARTITION in the overflow case; here the
     # count runs all partitions in one wave and the Arrow fetch reads
-    # the materialized distinct only when it is provably <= max_vocab.
+    # the materialized distinct only when it is provably <= MAX_VOCAB.
     dn = (
         grams.select("codes")
         .mapInArrow(emit, "gram long")
         .distinct()
         .localCheckpoint(eager=False)
     )
-    if dn.count() > max_vocab:
+    if dn.count() > MAX_VOCAB:
         return None
     return np.sort(dn.toPandas()["gram"].to_numpy(dtype=np.int64))
 
@@ -705,47 +525,9 @@ def _doc_gram_stats_from_codes(
     return grams.mapInArrow(run, schema)
 
 
-def _collect_gram_vocab(norm_docs: DataFrame, k: int, max_vocab: int) -> list | None:
-    """Global sorted gram vocabulary (strings), or None when it exceeds
-    ``max_vocab`` — the k > 3 fallback; k <= 3 callers use the packed
-    codes pipeline above. Each task emits its own DISTINCT grams
-    (bounded by the vocab size, not the corpus size), so the driver
-    collect is bounded by construction."""
-    import pyarrow as pa
-
-    def emit(batches):
-        seen: set = set()
-        for b in batches:
-            for t in b.column("t").to_pylist():
-                seen.update(_gram_set(t or "", k))
-        if seen:
-            out = sorted(seen)
-            if len(out) > max_vocab:
-                # over-budget proof needs only max_vocab+1 distinct
-                # grams; truncation bounds the shuffle on unbounded
-                # corpora (same rule as the packed-code collector)
-                out = out[: max_vocab + 1]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out, type=pa.string())], names=["gram"]
-            )
-
-    # count-guard-then-collect over a checkpointed distinct — see
-    # _collect_code_vocab for why distinct+limit+collect is neither
-    # fast (incremental CollectLimit waves) nor byte-bounded here.
-    dn = (
-        norm_docs.select("t")
-        .mapInArrow(emit, "gram string")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    if dn.count() > max_vocab:
-        return None
-    return sorted(dn.toPandas()["gram"].tolist())
-
-
 def _vocab_g_vals(vocab: list) -> "object":
     """md5-derived permutation inputs g = int(md5[:15], 16) mod P for
-    every vocab gram — computed ONCE on the driver (<= max_vocab md5s)
+    every vocab gram — computed ONCE on the driver (<= MAX_VOCAB md5s)
     instead of once per (doc, gram) row."""
     import hashlib
 
@@ -761,112 +543,56 @@ def _vocab_g_vals(vocab: list) -> "object":
     )
 
 
-def _doc_gram_stats(
-    norm_docs: DataFrame, k: int, vocab: list, n_perm: int
-) -> DataFrame:
-    """One Arrow pass: (doc_id, mask, sz[, h0..h{n_perm-1}]) per row —
-    the k > 3 fallback (k <= 3 callers use
-    :func:`_doc_gram_stats_from_codes` over the cached codes table).
+def _fast_stats(nd: DataFrame, k: int, n_perm: int):
+    """The single guard of both Jaccard tiers' fast path.
 
-    mask = bitset over the global sorted vocab; sz = |gram set|;
-    h_j = min((a_j * g + b_j) mod P) — identical values to
-    :func:`minhash_signatures` (pass ``n_perm=0`` to skip them)."""
-    from typing import Iterator
+    From the normalized (doc_id, t) table, returns ``(stats, br)``:
+    the checkpointed (doc_id, mask, sz[, h0..h{n_perm-1}]) table and
+    the (b_map, b_M64, b_sz, int_ids) mask broadcasts. Returns None —
+    the caller takes the distributed fallback — when k > 3, the vocab
+    exceeds ``MAX_VOCAB``, the docs exceed ``MAX_DOCS`` (or there are
+    none), the mask matrix exceeds ``MAX_MASK_BYTES``, or an id
+    repeats (the fallback adds up a repeated id's gram rows, as the
+    oracles do; one mask per id cannot).
 
+    Every driver collect is bounded before it runs: the vocab by its
+    count guard, the masks by ``n_docs * nbytes``."""
     import numpy as np
-    import pyarrow as pa
 
-    from pyspark.sql import types as T
-
-    spark = norm_docs.sparkSession
-    nbytes = (len(vocab) + 7) // 8
-    b_vocab = spark.sparkContext.broadcast(
-        ({g: i for i, g in enumerate(vocab)}, _vocab_g_vals(vocab))
+    if k > 3:
+        return None
+    # gram-extract ONCE into a cached codes table; the vocab collect
+    # and the stats pass both read it
+    grams = _packed_grams_table(nd, k).localCheckpoint(eager=False)
+    vocab_codes = _collect_code_vocab(grams)
+    if vocab_codes is None:
+        return None
+    stats = _doc_gram_stats_from_codes(grams, vocab_codes, k, n_perm).localCheckpoint(
+        eager=False
     )
-    coeffs = _perm_coeffs(n_perm) if n_perm else []
-
-    fields = [norm_docs.schema["doc_id"], T.StructField("mask", T.BinaryType(), False),
-              T.StructField("sz", T.LongType(), False)]
-    fields += [T.StructField(f"h{j}", T.LongType(), True) for j in range(n_perm)]
-    schema = T.StructType(fields)
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        idx, g_vals = b_vocab.value
-        for b in batches:
-            texts = b.column("t").to_pylist()
-            n = len(texts)
-            if n == 0:
-                continue
-            counts = np.empty(n, dtype=np.int64)
-            code_lists = []
-            for i, t in enumerate(texts):
-                gs = _gram_set(t or "", k)
-                code_lists.append(
-                    np.fromiter((idx[g] for g in gs), dtype=np.int64, count=len(gs))
-                )
-                counts[i] = len(gs)
-            codes = np.concatenate(code_lists)
-            starts = np.zeros(n, dtype=np.int64)
-            np.cumsum(counts[:-1], out=starts[1:])
-            M = np.zeros((n, nbytes), dtype=np.uint8)
-            rows = np.repeat(np.arange(n), counts)
-            np.bitwise_or.at(
-                M, (rows, codes >> 3), (1 << (codes & 7)).astype(np.uint8)
-            )
-            arrays = [
-                b.column("doc_id"),
-                pa.array([M[i].tobytes() for i in range(n)], type=pa.binary()),
-                pa.array(counts, type=pa.int64()),
-            ]
-            if n_perm:
-                gv = g_vals[codes]
-                for a, b_ in coeffs:
-                    vals = (gv * a + b_) % MINHASH_P
-                    arrays.append(
-                        pa.array(np.minimum.reduceat(vals, starts), type=pa.int64())
-                    )
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=["doc_id", "mask", "sz"] + [f"h{j}" for j in range(n_perm)]
-            )
-
-    return norm_docs.mapInArrow(run, schema)
-
-
-def _mask_broadcasts(stats: DataFrame, nbytes: int, max_docs: int, max_mask_bytes: int):
-    """Count-guard-then-collect of the (doc_id, mask, sz) table; returns
-    (b_map, b_M64, b_sz, id_kind) broadcasts or None when a bound is
-    exceeded or ids are not unique (the distributed path handles those)."""
-    import numpy as np
-
+    nbytes = (len(vocab_codes) + 7) // 8
     n_docs = stats.count()
-    if n_docs == 0 or n_docs > max_docs or n_docs * nbytes > max_mask_bytes:
+    if n_docs == 0 or n_docs > MAX_DOCS or n_docs * nbytes > MAX_MASK_BYTES:
         return None
     pdf = stats.select("doc_id", "mask", "sz").toPandas()
     ids = pdf["doc_id"].to_numpy()
     if len(np.unique(ids)) != len(ids):
-        return None  # duplicate ids: the groupBy path merges them; we don't
+        return None
     nwords = (nbytes + 7) // 8
     M = np.zeros((n_docs, nwords * 8), dtype=np.uint8)
     M[:, :nbytes] = np.frombuffer(b"".join(pdf["mask"]), dtype=np.uint8).reshape(
         n_docs, nbytes
     )
-    M64 = M.view(np.uint64)
     sizes = pdf["sz"].to_numpy(dtype="int64")
     int_ids = ids.dtype.kind in "iu"
-    spark = stats.sparkSession
+    sc = stats.sparkSession.sparkContext
     if int_ids:
         order = np.argsort(ids, kind="stable")
-        b_map = spark.sparkContext.broadcast((ids[order], order))
+        b_map = sc.broadcast((ids[order], order))
     else:
-        b_map = spark.sparkContext.broadcast(
-            {v: i for i, v in enumerate(pdf["doc_id"].tolist())}
-        )
-    return (
-        b_map,
-        spark.sparkContext.broadcast(M64),
-        spark.sparkContext.broadcast(sizes),
-        int_ids,
-    )
+        b_map = sc.broadcast({v: i for i, v in enumerate(pdf["doc_id"].tolist())})
+    br = (b_map, sc.broadcast(M.view(np.uint64)), sc.broadcast(sizes), int_ids)
+    return stats, br
 
 
 def _swar_popcount_rows(x):
@@ -1025,63 +751,25 @@ def _minhash_fast(
     k: int,
     max_block: int,
     metrics: dict | None,
-    max_vocab: int = 1 << 16,
-    max_docs: int = 1_000_000,
-    max_mask_bytes: int = 1 << 28,
 ) -> DataFrame | None:
     """Bounded-vocab MinHash tier: same output as the distributed
     path, no shingle explode, no pair shuffle. None -> caller falls
-    back to the distributed tier (unbounded vocab / too many docs /
-    duplicate ids)."""
-    nd = _norm_docs(_ensure_parallel(df), id_col, text_col)
-    if k <= 3:
-        # gram-extract ONCE into a cached codes table; vocab collect
-        # and the stats pass both read it (the previous shape ran the
-        # full text -> grams derivation twice)
-        grams = _packed_grams_table(nd, k).localCheckpoint(eager=False)
-        vocab_codes = _collect_code_vocab(grams, max_vocab)
-        if vocab_codes is None:
-            return None
-        stats = _doc_gram_stats_from_codes(grams, vocab_codes, k, n_perm)
-        n_vocab = len(vocab_codes)
-    else:
-        nd = nd.localCheckpoint(eager=False)
-        vocab = _collect_gram_vocab(nd, k, max_vocab)
-        if vocab is None:
-            return None
-        stats = _doc_gram_stats(nd, k, vocab, n_perm)
-        n_vocab = len(vocab)
-    stats = stats.localCheckpoint(eager=False)
-    nbytes = (n_vocab + 7) // 8
-    br = _mask_broadcasts(stats, nbytes, max_docs, max_mask_bytes)
-    if br is None:
+    back to the distributed tier (see :func:`_fast_stats`)."""
+    fast = _fast_stats(_norm_docs(ensure_parallel(df), id_col, text_col), k, n_perm)
+    if fast is None:
         return None
-    rpb = n_perm // bands
-    band_keys = [
-        F.concat_ws(
-            "|", F.lit(str(b)), *[F.col(f"h{b * rpb + r}") for r in range(rpb)]
+    stats, br = fast
+    buckets = (
+        stats.select("doc_id", _band_keys(n_perm, bands))
+        .groupBy("band_key")
+        .agg(
+            F.sort_array(F.collect_list("doc_id")).alias("ids"),
+            F.count(F.lit(1)).alias("bs"),
         )
-        for b in range(bands)
-    ]
-    banded = stats.select(
-        "doc_id", F.explode(F.array(*band_keys)).alias("band_key")
-    )
-    buckets = banded.groupBy("band_key").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("ids"),
-        F.count(F.lit(1)).alias("bs"),
     )
     if metrics is not None:
         buckets = buckets.localCheckpoint(eager=False)
-        dropped = (
-            buckets.where(F.col("bs") > max_block)
-            .agg(
-                F.count(F.lit(1)).alias("nb"),
-                F.coalesce(F.sum("bs"), F.lit(0)).alias("nr"),
-            )
-            .first()
-        )
-        metrics["dropped_buckets"] = int(dropped["nb"])
-        metrics["dropped_rows"] = int(dropped["nr"])
+        _count_dropped(buckets, max_block, metrics)
     units = (
         buckets.where((F.col("bs") >= 2) & (F.col("bs") <= max_block))
         .select(
@@ -1093,6 +781,7 @@ def _minhash_fast(
         .repartition(df.sparkSession.sparkContext.defaultParallelism)
     )
     verified = _verify_units_jaccard(units, stats.schema["doc_id"], br, threshold)
+    # a pair sharing several band buckets is verified in each of them
     return verified.distinct()
 
 
@@ -1103,49 +792,20 @@ def _ngram_fast(
     block_col: str,
     k: int,
     min_jaccard: float,
-    chunk: int = 192,
-    max_vocab: int = 1 << 16,
-    max_docs: int = 1_000_000,
-    max_mask_bytes: int = 1 << 28,
 ) -> DataFrame | None:
     """Bounded-vocab blocked-Jaccard tier: block pair enumeration is
     LOCAL to the verify task (the O(block^2) pair table never touches
     an exchange); big blocks are split into i-range chunks of
-    ``chunk`` rows for parallelism."""
-    base = _ensure_parallel(df)
-    nd = base.select(
-        F.col(id_col).alias("doc_id"),
-        _norm_text(F.col(text_col)).alias("t"),
-        F.col(block_col).alias("blk"),
-    )
-    if k <= 3:
-        grams = _packed_grams_table(nd.select("doc_id", "t"), k).localCheckpoint(
-            eager=False
-        )
-        vocab_codes = _collect_code_vocab(grams, max_vocab)
-        if vocab_codes is None:
-            return None
-        stats = _doc_gram_stats_from_codes(grams, vocab_codes, k, 0)
-        n_vocab = len(vocab_codes)
-        # the block table needs only (doc_id, blk): read them straight
-        # off the (column-pruned) source instead of checkpointing text
-        nd = base.select(
-            F.col(id_col).alias("doc_id"), F.col(block_col).alias("blk")
-        )
-    else:
-        nd = nd.localCheckpoint(eager=False)
-        vocab = _collect_gram_vocab(nd, k, max_vocab)
-        if vocab is None:
-            return None
-        stats = _doc_gram_stats(nd.select("doc_id", "t"), k, vocab, 0)
-        n_vocab = len(vocab)
-    stats = stats.localCheckpoint(eager=False)
-    nbytes = (n_vocab + 7) // 8
-    br = _mask_broadcasts(stats, nbytes, max_docs, max_mask_bytes)
-    if br is None:
+    ``NGRAM_CHUNK`` rows for parallelism. None -> distributed
+    fallback (see :func:`_fast_stats`)."""
+    base = ensure_parallel(df)
+    fast = _fast_stats(_norm_docs(base, id_col, text_col), k, 0)
+    if fast is None:
         return None
+    stats, br = fast
     bl = (
-        nd.where(F.col("blk").isNotNull())
+        base.select(F.col(id_col).alias("doc_id"), F.col(block_col).alias("blk"))
+        .where(F.col("blk").isNotNull())
         .groupBy("blk")
         .agg(
             F.sort_array(F.collect_list("doc_id")).alias("ids"),
@@ -1158,13 +818,13 @@ def _ngram_fast(
         "n",
         F.explode(
             F.sequence(
-                F.lit(0), F.ceil((F.col("n") - 1) / F.lit(chunk)).cast("long") - 1
+                F.lit(0), F.ceil((F.col("n") - 1) / F.lit(NGRAM_CHUNK)).cast("long") - 1
             )
         ).alias("ci"),
     ).select(
         "ids",
-        (F.col("ci") * chunk).alias("lo"),
-        F.least(F.col("ci") * chunk + chunk, F.col("n") - 1).alias("hi"),
+        (F.col("ci") * NGRAM_CHUNK).alias("lo"),
+        F.least(F.col("ci") * NGRAM_CHUNK + NGRAM_CHUNK, F.col("n") - 1).alias("hi"),
     ).repartition(df.sparkSession.sparkContext.defaultParallelism)
     # (round-robin spread — same rationale as the minhash units: each
     # row expands to O(chunk * block) pairs, so AQE's byte-based
@@ -1187,13 +847,13 @@ def minhash_near_duplicates(
     bucket-join -> exact-Jaccard verify. Returns
     (doc_a, doc_b, inter_size, union_size) for pairs with
     jaccard >= threshold that share >= 1 LSH band. ``metrics`` (opt-in)
-    receives the capped-bucket drop counts from lsh_candidate_pairs.
+    receives the capped-bucket drop counts.
 
-    Round 6: when the gram vocabulary is bounded the tier runs on the
-    Arrow fast path above (one pass computes signatures + masks, pairs
-    enumerate inside band buckets, nothing O(pairs) is shuffled); the
-    distributed shingle path below is the unbounded-vocab / 100 TB
-    fallback and computes identical output."""
+    Two physical paths, picked by :func:`_fast_stats`: the Arrow fast
+    path (one pass computes signatures + masks, pairs enumerate inside
+    band buckets, nothing O(pairs) is shuffled), or the distributed
+    shingle path below — the unbounded-vocab / 100 TB / repeated-id
+    fallback, with identical output for unique ids."""
     fast = _minhash_fast(
         df, id_col, text_col, threshold, n_perm, bands, k, max_block, metrics
     )
@@ -1202,14 +862,11 @@ def minhash_near_duplicates(
     # The shingle explosion feeds three consumers (signatures, sizes,
     # intersection); localCheckpoint materializes it once instead of
     # re-exploding ~len(text) rows per doc three times. On a cluster
-    # this is a cached/checkpointed intermediate table. _ensure_parallel
+    # this is a cached/checkpointed intermediate table. ensure_parallel
     # first: a single-file corpus would otherwise explode serially.
-    sh = shingles(_ensure_parallel(df), id_col, text_col, k).localCheckpoint(eager=False)
+    sh = shingles(ensure_parallel(df), id_col, text_col, k).localCheckpoint(eager=False)
     sigs = minhash_signatures(sh, n_perm)
-    # distinct deferred: the bitset verify is idempotent per pair, so
-    # multi-band duplicate candidates dedupe on the (tiny) verified
-    # output instead of shuffling the full candidate flood
-    pairs = lsh_candidate_pairs(sigs, n_perm, bands, max_block, metrics, distinct=False)
+    pairs = lsh_candidate_pairs(sigs, n_perm, bands, max_block, metrics)
 
     # Exact size-ratio prefilter (lossless): J(A,B) <= min|.|/max|.|,
     # so a pair whose shingle-set sizes differ by more than the
@@ -1227,19 +884,9 @@ def minhash_near_duplicates(
         )
         .select("doc_a", "doc_b")
     )
-
-    # auto-pick the verify plan: bitset popcount while the gram vocab
-    # is bounded (char-k-grams usually are), shuffle-join verify beyond.
-    # The bitset path verifies duplicate candidates idempotently and
-    # dedupes the (small) thresholded output; the shuffle-join fallback
-    # needs distinct input (its gram-join groupBy would multiply
-    # intersection counts for repeated pairs).
-    verified = jaccard_verify_bitset(sh, pairs)
-    if verified is None:
-        verified = jaccard_verify(sh, pairs.distinct())
-    return verified.where(
+    return jaccard_verify(sh, pairs).where(
         F.col("inter_size") >= F.lit(threshold) * F.col("union_size")
-    ).distinct()
+    )
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1262,7 +909,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    base = _ensure_parallel(df).select(
+    base = ensure_parallel(df).select(
         F.col(id_col).alias("doc_id"),
         F.split(_norm_text(F.col(text_col)), r"\s+").alias("toks"),
     ).where(F.col("toks").isNotNull())
@@ -1364,7 +1011,7 @@ def simhash_near_duplicates(
     if max_hamming > bands - 1:
         raise ValueError("pigeonhole soundness needs max_hamming <= bands - 1")
     rpb = SIMHASH_BITS // bands
-    fps = simhash(_ensure_parallel(df), id_col, text_col)
+    fps = simhash(df, id_col, text_col)
     band_keys = [
         (
             F.lit(b * (1 << rpb))
@@ -1520,14 +1167,15 @@ def ngram_jaccard_pairs(
     more than the threshold ratio are dropped before the verify — the
     tiny per-doc size table broadcasts.
 
-    Round 6: bounded-vocab corpora run on the Arrow fast path (pairs
-    enumerated block-locally against broadcast masks — the O(block^2)
-    pair table never crosses an exchange); unbounded vocab falls back
-    to the distributed join path below, identical output."""
+    Two physical paths, picked by :func:`_fast_stats`: the Arrow fast
+    path (pairs enumerated block-locally against broadcast masks — the
+    O(block^2) pair table never crosses an exchange), or the
+    distributed join path below — the unbounded-vocab / repeated-id
+    fallback, with identical output for unique ids."""
     fast = _ngram_fast(df, id_col, text_col, block_col, k, min_jaccard)
     if fast is not None:
         return fast
-    df = _ensure_parallel(df)
+    df = ensure_parallel(df)
     sh = shingles(df, id_col, text_col, k).localCheckpoint(eager=False)
     blocks = df.select(F.col(id_col).alias("doc_id"), F.col(block_col).alias("blk"))
     a = blocks.select(F.col("doc_id").alias("doc_a"), "blk")
@@ -1549,10 +1197,9 @@ def ngram_jaccard_pairs(
             )
             .select("doc_a", "doc_b")
         )
-    verified = jaccard_verify_bitset(sh, pairs)
-    if verified is None:
-        verified = jaccard_verify(sh, pairs)
-    return verified.where(F.col("inter_size") >= F.lit(min_jaccard) * F.col("union_size"))
+    return jaccard_verify(sh, pairs).where(
+        F.col("inter_size") >= F.lit(min_jaccard) * F.col("union_size")
+    )
 
 
 def embedding_near_duplicates(
@@ -1601,7 +1248,7 @@ def embedding_near_duplicates(
     import pyarrow as pa
 
     base = (
-        _ensure_parallel(df.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v")))
+        ensure_parallel(df.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v")))
         .localCheckpoint(eager=False)
     )
     schema_empty = "doc_a long, doc_b long"

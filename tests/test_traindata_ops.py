@@ -84,32 +84,6 @@ def test_minhash_near_dup_finds_planted_pair(spark, docs):
         assert r["inter_size"] >= 0.7 * r["union_size"]
 
 
-def test_bitset_verify_caps_before_collect(spark, docs):
-    """The bitset verify must decline (return None) when the doc-count
-    or mask-byte-product bound is exceeded — BEFORE collecting anything
-    — and agree exactly with the shuffle-join verify under the cap."""
-    from legal_knowledge_graph_spark.operators.dedup import (
-        jaccard_verify,
-        jaccard_verify_bitset,
-        shingles,
-    )
-
-    d = docs.select("doc_id", "text").where("doc_id < 20")
-    sh = shingles(d, "doc_id", "text")
-    pairs = spark.createDataFrame([(0, 1), (2, 3)], "doc_a long, doc_b long")
-    assert jaccard_verify_bitset(sh, pairs, max_mask_bytes=16) is None
-    assert jaccard_verify_bitset(sh, pairs, max_docs=5) is None
-    bs = {
-        (r["doc_a"], r["doc_b"]): (r["inter_size"], r["union_size"])
-        for r in jaccard_verify_bitset(sh, pairs).collect()
-    }
-    sj = {
-        (r["doc_a"], r["doc_b"]): (r["inter_size"], r["union_size"])
-        for r in jaccard_verify(sh, pairs).collect()
-    }
-    assert bs == sj and len(bs) == 2
-
-
 def test_embedding_near_dup_cap_is_dim_aware(spark, embs):
     """The broadcast cap scales with rows x dim: a byte budget one row
     short raises; the exact budget passes."""
@@ -146,6 +120,93 @@ def test_lsh_drop_metrics_counted(spark):
     assert pairs.count() == 0
     assert m["dropped_buckets"] >= 1
     assert m["dropped_rows"] >= 10
+
+
+def test_lsh_drop_metrics_fast_path_equals_fallback(spark, monkeypatch):
+    """minhash_near_duplicates(metrics=) counts the same dropped band
+    buckets on the bounded fast path as on the distributed fallback:
+    10 identical docs put all 10 in one bucket per band, so max_block=5
+    drops every bucket of the 4 bands."""
+    from legal_knowledge_graph_spark.operators import dedup
+
+    d = spark.createDataFrame(
+        [(i, "aaaa bbbb cccc dddd eeee") for i in range(10)],
+        "doc_id long, text string",
+    )
+    real_fast = dedup._minhash_fast
+    took_fast = []
+
+    def spy(*a, **kw):
+        out = real_fast(*a, **kw)
+        took_fast.append(out is not None)
+        return out
+
+    monkeypatch.setattr(dedup, "_minhash_fast", spy)
+    fast_m: dict = {}
+    assert dedup.minhash_near_duplicates(
+        d, "doc_id", "text", max_block=5, metrics=fast_m
+    ).count() == 0
+    assert took_fast == [True]
+    monkeypatch.setattr(dedup, "_minhash_fast", lambda *a, **kw: None)
+    dist_m: dict = {}
+    assert dedup.minhash_near_duplicates(
+        d, "doc_id", "text", max_block=5, metrics=dist_m
+    ).count() == 0
+    assert fast_m == dist_m == {"dropped_buckets": 4, "dropped_rows": 40}
+
+
+def test_jaccard_tiers_on_empty_input(spark):
+    """Both Jaccard tiers return zero rows, with the pair schema, on a
+    zero-row input."""
+    empty = spark.createDataFrame([], "doc_id long, text string, source string")
+    outs = [
+        minhash_near_duplicates(empty.select("doc_id", "text"), "doc_id", "text"),
+        ngram_jaccard_pairs(empty, "doc_id", "text", "source", min_jaccard=0.5),
+    ]
+    for out in outs:
+        assert out.columns == ["doc_a", "doc_b", "inter_size", "union_size"]
+        assert out.count() == 0
+
+
+def test_jaccard_tiers_with_repeated_ids_match_oracles(spark, docs):
+    """Ten doc ids re-used by a second row with mutated text: both
+    Jaccard tiers must equal their DuckDB oracles run on the same rows
+    (a repeated id's gram rows add up, as in shingles()), and no pair
+    may be emitted twice."""
+    from legal_knowledge_graph_spark.entry_queries import (
+        SQL_NGRAM_JACCARD,
+        _sql_minhash,
+    )
+
+    d = docs.select("doc_id", "text", "source")
+    reused = d.where("doc_id < 10").select(
+        "doc_id", F.regexp_replace("text", r"^\S+", "zzz").alias("text"), "source"
+    )
+    corpus = d.unionByName(reused)
+    con = duckdb.connect()
+    con.register("documents", corpus.toPandas())
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    got = rows(
+        minhash_near_duplicates(
+            corpus.select("doc_id", "text"), "doc_id", "text", threshold=0.7
+        )
+    )
+    assert got == sorted(con.execute(_sql_minhash(threshold=0.7)).fetchall())
+    assert len(got) > 0
+
+    got = rows(
+        ngram_jaccard_pairs(corpus, "doc_id", "text", "source", min_jaccard=0.0).where(
+            F.col("inter_size") >= 0.5 * F.col("union_size")
+        )
+    )
+    assert got == sorted(con.execute(SQL_NGRAM_JACCARD).fetchall())
+    assert len(got) > 0
+
+    pairs = ngram_jaccard_pairs(corpus, "doc_id", "text", "source", min_jaccard=0.5)
+    assert pairs.groupBy("doc_a", "doc_b").count().where("count > 1").count() == 0
 
 
 def test_emb_lsh_near_dup_scale_path(spark, embs):
