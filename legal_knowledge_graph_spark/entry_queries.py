@@ -16,6 +16,8 @@ rounded to 6 dp on both sides.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -767,63 +769,6 @@ from d
 """
 
 
-QUERIES: dict[str, callable] = {
-    "split_intro_body": q_split_intro_body,
-    "mention_counts": q_mention_counts,
-    "triple_extract": q_triple_extract,
-    "surface_normalize": q_surface_normalize,
-    "entity_link": q_entity_link,
-    "cc_components": q_cc_components,
-    "tree_agg": q_tree_agg,
-    "next_prev": q_next_prev,
-    "summary_rule": q_summary_rule,
-    "topk_cosine": q_topk_cosine,
-    "dedup_exact": q_dedup_exact,
-    "dedup_minhash": q_dedup_minhash,
-    "simhash": q_simhash,
-    "ngram_jaccard": q_ngram_jaccard,
-    "embedding_near_dup": q_embedding_near_dup,
-    "token_stats": q_token_stats,
-    "language_id": q_language_id,
-    "fingerprint": q_fingerprint,
-    "salted_degree": q_salted_degree,
-    "media_meta": q_media_meta,
-    "span_pr": q_span_pr,
-    "quality_score": q_quality_score,
-    "lsh_ann": q_lsh_ann,
-    "decode_features": q_decode_features,
-}
-
-ORACLES: dict[str, str] = {
-    "split_intro_body": SQL_SPLIT,
-    "mention_counts": SQL_MENTION_COUNTS,
-    "triple_extract": SQL_TRIPLES,
-    "surface_normalize": SQL_SURFACE_NORM,
-    "entity_link": SQL_ENTITY_LINK,
-    "cc_components": SQL_CC,
-    "tree_agg": SQL_TREE_AGG,
-    "next_prev": SQL_NEXT_PREV,
-    "summary_rule": SQL_SUMMARY_RULE,
-    "topk_cosine": SQL_TOPK_COSINE,
-    "dedup_exact": SQL_DEDUP_EXACT,
-    "dedup_minhash": SQL_DEDUP_MINHASH,
-    "simhash": SQL_SIMHASH,
-    "ngram_jaccard": SQL_NGRAM_JACCARD,
-    "embedding_near_dup": SQL_EMB_NEAR_DUP,
-    "token_stats": SQL_TOKEN_STATS,
-    "language_id": SQL_LANGUAGE_ID,
-    "fingerprint": SQL_FINGERPRINT,
-    "salted_degree": SQL_SALTED_DEGREE,
-    "media_meta": SQL_MEDIA_META,
-    "span_pr": SQL_SPAN_PR,
-    "quality_score": SQL_QUALITY,
-    "decode_features": SQL_DECODE_FEATURES,
-    # lsh_ann: intentionally no oracle (hash-bucketed recall is
-    # engine-specific) -> rows-only; the exactness reduction is gated
-    # by lsh_ann_exact below.
-}
-
-
 # ------------------------------------------------------- round-1 additions
 
 
@@ -971,27 +916,6 @@ with d as (select doc_id, {MARKER_PREFIX_SQL} as text from documents)
 select doc_id, len(regexp_extract_all(text, '\\w+|[^\\w\\s]'))::bigint as n_bpeish_tokens
 from d
 """
-
-
-QUERIES.update(
-    {
-        "deterministic_sample": q_deterministic_sample,
-        "referenced_scan": q_referenced_scan,
-        "event_windows": q_event_windows,
-        "json_parse": q_json_parse,
-        "bpe_tokens": q_bpe_tokens,
-    }
-)
-
-ORACLES.update(
-    {
-        "deterministic_sample": SQL_DETERMINISTIC_SAMPLE,
-        "referenced_scan": SQL_REFERENCED_SCAN,
-        "event_windows": SQL_EVENT_WINDOWS,
-        "json_parse": SQL_JSON_PARSE,
-        "bpe_tokens": SQL_BPE_TOKENS,
-    }
-)
 
 
 # --------------------------------------------- query surface (Q3/Q4/Q5)
@@ -1145,22 +1069,6 @@ where strpos(text, content) > 0
 """
 
 
-QUERIES.update(
-    {
-        "search_children_topk": q_search_children_topk,
-        "search_neighbors": q_search_neighbors,
-        "resolve_spans": q_resolve_spans,
-    }
-)
-ORACLES.update(
-    {
-        "search_children_topk": SQL_SEARCH_CHILDREN,
-        "search_neighbors": SQL_SEARCH_NEIGHBORS,
-        "resolve_spans": SQL_RESOLVE_SPANS,
-    }
-)
-
-
 def q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k (train -> assign -> probe). No SQL oracle
     (centroids come from driver-side Lloyd iterations); rows-only
@@ -1192,9 +1100,6 @@ def q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id", "rank")
 
 
-QUERIES["ivf_ann"] = q_ivf_ann
-
-
 def q_rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical subtotal aggregation (ROLLUP) over lineitem —
     the multi-level aggregate shape (per-flag x status, per-flag,
@@ -1224,10 +1129,6 @@ select coalesce(l_returnflag, 'ALL') as returnflag,
 from lineitem
 group by rollup (l_returnflag, l_linestatus)
 """
-
-QUERIES["rollup_agg"] = q_rollup_agg
-ORACLES["rollup_agg"] = SQL_ROLLUP
-
 
 # ------------------------------------------------------- round-2 additions
 # Oracle coverage for the SURVEY §2 operators that were pytest-only in
@@ -1719,36 +1620,6 @@ order by rank limit 10
 """
 
 
-QUERIES.update(
-    {
-        "search_corpus": q_search_corpus,
-        "corpus_toc": q_corpus_toc,
-        "toc_reshape": q_toc_reshape,
-        "benchmark_validate": q_benchmark_validate,
-        "tree_summarize": q_tree_summarize,
-        "align_spans": q_align_spans,
-        "corpus_nodes": q_corpus_nodes,
-        "vector_attach": q_vector_attach,
-        "idempotent_ids": q_idempotent_ids,
-        "ivf_ann_exact": q_ivf_ann_exact,
-        "lsh_ann_exact": q_lsh_ann_exact,
-    }
-)
-ORACLES.update(
-    {
-        "search_corpus": SQL_SEARCH_CORPUS,
-        "corpus_toc": SQL_CORPUS_TOC,
-        "toc_reshape": SQL_TOC_RESHAPE,
-        "benchmark_validate": SQL_BENCHMARK_VALIDATE,
-        "tree_summarize": SQL_TREE_SUMMARIZE,
-        "align_spans": SQL_ALIGN_SPANS,
-        "corpus_nodes": SQL_CORPUS_NODES,
-        "vector_attach": SQL_VECTOR_ATTACH,
-        "idempotent_ids": SQL_IDEMPOTENT_IDS,
-        "ivf_ann_exact": SQL_IVF_ANN_EXACT,
-        "lsh_ann_exact": SQL_LSH_ANN_EXACT,
-    }
-)
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful sessionization, batch twin (streaming/sessions.py:114):
     gap-and-island session assignment over the events table — the
@@ -2148,20 +2019,6 @@ from documents
 """
 
 
-QUERIES.update(
-    {
-        "sessionize": q_sessionize,
-        "frame_sample": q_frame_sample,
-        "batch_topk": q_batch_topk,
-        "benchmark_summary": q_benchmark_summary,
-        "html_decode": q_html_decode,
-        "toc_components": q_toc_components,
-        "simhash_near_dup": q_simhash_near_dup,
-        "structure_sequential": q_structure_sequential,
-    }
-)
-
-
 # --------------------------------------------------- curation operators
 
 
@@ -2331,63 +2188,9 @@ select qid, id, rank, round(1.0 / rank, 6) as score from s where rank <= 5
 """
 
 
-QUERIES.update(
-    {
-        "emb_lsh_near_dup_exact": q_emb_lsh_near_dup_exact,
-        "rank_scores": q_rank_scores,
-        "dedup_groups": q_dedup_groups,
-        "sample_per_group": q_sample_per_group,
-        "pack_sequences": q_pack_sequences,
-        "hash_split": q_hash_split,
-    }
-)
-ORACLES.update(
-    {
-        "emb_lsh_near_dup_exact": SQL_EMB_LSH_NEAR_DUP_EXACT,
-        "rank_scores": SQL_RANK_SCORES,
-        "dedup_groups": SQL_DEDUP_GROUPS,
-        "sample_per_group": SQL_SAMPLE_PER_GROUP,
-        "pack_sequences": SQL_PACK_SEQUENCES,
-        "hash_split": SQL_HASH_SPLIT,
-    }
-)
-ORACLES.update(
-    {
-        "sessionize": SQL_SESSIONIZE,
-        "frame_sample": SQL_FRAME_SAMPLE,
-        "batch_topk": SQL_BATCH_TOPK,
-        "benchmark_summary": SQL_BENCHMARK_SUMMARY,
-        "html_decode": SQL_HTML_DECODE,
-        "toc_components": SQL_TOC_COMPONENTS,
-        "simhash_near_dup": SQL_SIMHASH_NEAR_DUP,
-        "structure_sequential": SQL_STRUCTURE_SEQUENTIAL,
-    }
-)
-# Still pytest-only, with reasons: S4/S5 resume (filesystem snapshot
-# protocol — no SQL analogue; test_pipeline.py::test_pipeline_resume +
-# crash-consistency test), F1 non-verbatim fuzzy tail (difflib-oracle
-# + hypothesis property tests), streaming execution twins (the batch
-# semantics ARE gated via event_windows/sessionize; stream==batch
-# equivalence is pytest).
-
-# ------------------------------------------------- round-3 gate layout
-# The driver's CORRECTNESS gate verifies the FIRST 50 queries() entries
-# in dict-insertion order (round-2 verdict: entries 51-59 got no row).
-# Consolidation: merged entries keep asserting the UNION of their
-# predecessors' outputs (each absorbed query still runs through its
-# REAL operator; outputs are unioned with a tag column or wide-joined
-# on doc_id), and the 9 previously gate-unverified entries are
-# registered FIRST. Merge map (old key -> merged entry):
-#   summary_rule      -> tree_summarize     (union, path_key tag)
-#   topk_cosine       -> batch_topk         (union, qid = -7 block)
-#   simhash           -> simhash_near_dup   (union, kind tag)
-#   toc_reshape       -> toc_components     (union, key prefix tag)
-#   span_pr           -> benchmark_summary  (union, n = -1 per-query)
-#   lsh_ann + ivf_ann -> ann_approx         (union, method tag; rows-only)
-#   token_stats + quality_score + language_id + fingerprint
-#     + bpe_tokens    -> text_metrics       (wide join on doc_id)
-# bench.py still times the retired names via their q_* functions, so
-# round-over-round BENCH key comparison stays intact.
+# ------------------------------------------------- round-3+ additions
+# Merges that are not a tagged union (a wide join, stats as extra
+# histogram buckets, a multi-table variant) and later operators.
 
 
 def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2440,172 +2243,6 @@ join (select doc_id, n_tokens as q_n_tokens, stopword_hits, punct_chars
 join ({SQL_LANGUAGE_ID}) l on l.doc_id = ts.doc_id
 join ({SQL_FINGERPRINT}) f on f.doc_id = ts.doc_id
 join ({SQL_BPE_TOKENS}) b on b.doc_id = ts.doc_id
-"""
-
-
-def q_tree_summarize_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """tree_summarize ∪ summary_rule (A2/A3/M3 ∪ A4): the bottom-up
-    level-loop rows plus the summary-else-content rule rows tagged
-    path_key='__summary_rule__' (url = doc_id)."""
-    base = q_tree_summarize(spark, sf_dir)
-    rule = q_summary_rule(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit("__summary_rule__").alias("path_key"),
-        F.col("vec_text_md5").alias("summary"),
-    )
-    return base.unionByName(rule)
-
-
-SQL_TREE_SUMMARIZE_MERGED = f"""
-select url, path_key, summary from ({SQL_TREE_SUMMARIZE})
-union all
-select doc_id::varchar as url, '__summary_rule__' as path_key,
-       vec_text_md5 as summary
-from ({SQL_SUMMARY_RULE})
-"""
-
-
-def q_batch_topk_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """batch_top_k ∪ brute_force_top_k: the many-query scan-once path
-    (qids 3/21/77, k=5) plus the single-query brute-force operator as
-    the qid=-7 block (query vector = embedding #7, k=10)."""
-    bt = q_batch_topk(spark, sf_dir)
-    tc = q_topk_cosine(spark, sf_dir).select(
-        F.lit(-7).cast("long").alias("qid"), "id", "rank"
-    )
-    return bt.unionByName(tc)
-
-
-SQL_BATCH_TOPK_MERGED = f"""
-select qid, id, rank from ({SQL_BATCH_TOPK})
-union all
-select -7 as qid, id, rank from ({SQL_TOPK_COSINE})
-"""
-
-
-def q_simhash_near_dup_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """simhash_near_duplicates ∪ simhash: Hamming-near pairs over the
-    80-planted-near-dup corpus (kind='pair': a=doc_a, b=doc_b,
-    v=hamming) plus the per-doc 32-bit fingerprints on the plain corpus
-    (kind='sig': a=doc_id, b=-1, v=simhash)."""
-    pairs = q_simhash_near_dup(spark, sf_dir).select(
-        F.lit("pair").alias("kind"),
-        F.col("doc_a").cast("long").alias("a"),
-        F.col("doc_b").cast("long").alias("b"),
-        F.col("hamming").cast("long").alias("v"),
-    )
-    sigs = q_simhash(spark, sf_dir).select(
-        F.lit("sig").alias("kind"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.lit(-1).cast("long").alias("b"),
-        F.col("simhash").cast("long").alias("v"),
-    )
-    return pairs.unionByName(sigs)
-
-
-SQL_SIMHASH_NEAR_DUP_MERGED = f"""
-select 'pair' as kind, doc_a::bigint as a, doc_b::bigint as b,
-       hamming::bigint as v
-from ({SQL_SIMHASH_NEAR_DUP})
-union all
-select 'sig' as kind, doc_id::bigint as a, -1::bigint as b,
-       simhash::bigint as v
-from ({SQL_SIMHASH})
-"""
-
-
-def q_toc_components_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T3 both directions: write-side build_toc (key='w:'||url) ∪
-    read-side quirk-exact reshape_toc over the six stored-TOC shape
-    variants (key='r:'||node_id)."""
-    wr = q_toc_reshape(spark, sf_dir).select(
-        F.concat(F.lit("w:"), F.col("url")).alias("key"),
-        F.col("toc_json").alias("payload_json"),
-    )
-    rd = q_toc_components(spark, sf_dir).select(
-        F.concat(F.lit("r:"), F.col("node_id").cast("string")).alias("key"),
-        F.col("components_json").alias("payload_json"),
-    )
-    return wr.unionByName(rd)
-
-
-SQL_TOC_COMPONENTS_MERGED = f"""
-select 'w:' || url as key, toc_json as payload_json from ({SQL_TOC_RESHAPE})
-union all
-select 'r:' || node_id as key, components_json as payload_json
-from ({SQL_TOC_COMPONENTS})
-"""
-
-
-def q_benchmark_summary_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """span_overlap_pr per-query rows (n = -1) ∪ the run_benchmark
-    summary averages row (query_id = -1, n = n_queries)."""
-    pr = q_span_pr(spark, sf_dir).select(
-        "query_id", "precision", "recall", F.lit(-1).cast("long").alias("n")
-    )
-    summ = q_benchmark_summary(spark, sf_dir).select(
-        F.lit(-1).cast("long").alias("query_id"),
-        F.col("average_precision").alias("precision"),
-        F.col("average_recall").alias("recall"),
-        F.col("n_queries").cast("long").alias("n"),
-    )
-    return pr.unionByName(summ)
-
-
-SQL_BENCHMARK_SUMMARY_MERGED = f"""
-select query_id, precision, recall, -1::bigint as n from ({SQL_SPAN_PR})
-union all
-select -1 as query_id, average_precision as precision,
-       average_recall as recall, n_queries::bigint as n
-from ({SQL_BENCHMARK_SUMMARY})
-"""
-
-
-def q_sampled_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2 ∪ S3: deterministic hash-ordered sampling (key='s:'||doc_id,
-    payload=sample_key) plus the referenced-only corpus scan
-    (key='r:'||doc_id, payload=n_chars)."""
-    a = q_deterministic_sample(spark, sf_dir).select(
-        F.concat(F.lit("s:"), F.col("doc_id").cast("string")).alias("key"),
-        F.col("sample_key").alias("payload"),
-    )
-    b = q_referenced_scan(spark, sf_dir).select(
-        F.concat(F.lit("r:"), F.col("doc_id").cast("string")).alias("key"),
-        F.col("n_chars").cast("string").alias("payload"),
-    )
-    return a.unionByName(b)
-
-
-SQL_SAMPLED_SCAN = f"""
-select 's:' || doc_id as key, sample_key as payload
-from ({SQL_DETERMINISTIC_SAMPLE})
-union all
-select 'r:' || doc_id as key, n_chars::varchar as payload
-from ({SQL_REFERENCED_SCAN})
-"""
-
-
-def q_corpus_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q1 ∪ Q2: the Corpus-label listing (key='c:'||contract_id,
-    payload=contract_name) plus the single-corpus TOC lookup
-    (key='t:'||node_id, payload=toc_json)."""
-    a = q_search_corpus(spark, sf_dir).select(
-        F.concat(F.lit("c:"), F.col("contract_id").cast("string")).alias("key"),
-        F.col("contract_name").alias("payload"),
-    )
-    b = q_corpus_toc(spark, sf_dir).select(
-        F.concat(F.lit("t:"), F.col("node_id").cast("string")).alias("key"),
-        F.col("toc_json").alias("payload"),
-    )
-    return a.unionByName(b)
-
-
-SQL_CORPUS_META = f"""
-select 'c:' || contract_id as key, contract_name as payload
-from ({SQL_SEARCH_CORPUS})
-union all
-select 't:' || node_id as key, toc_json as payload
-from ({SQL_CORPUS_TOC})
 """
 
 
@@ -2806,39 +2443,6 @@ select node, min(dist)::int as dist from walk group by node
 """
 
 
-def q_ann_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate ANN paths, rows-only (no SQL oracle by design —
-    hash-bucketed / centroid-trained recall is engine-specific; the
-    exactness reductions lsh_ann_exact / ivf_ann_exact are the
-    oracle-gated twins, and pytest pins recall vs brute force):
-    hyperplane-LSH top-k ∪ IVF top-k, tagged by method."""
-    l = q_lsh_ann(spark, sf_dir).select(F.lit("lsh").alias("method"), "id", "rank")
-    i = q_ivf_ann(spark, sf_dir).select(F.lit("ivf").alias("method"), "id", "rank")
-    return l.unionByName(i)
-
-
-def q_embedding_near_dup_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact broadcast-matmul tier ∪ the scale-path LSH tier at
-    n_planes=0 (its exact reduction) — both operators execute against
-    the same planted pairs; the tier tag keeps the two assertions
-    distinguishable (round-3 verdict item: frees one gate slot without
-    dropping either operator's assertion)."""
-    ex = q_embedding_near_dup(spark, sf_dir).select(
-        F.lit("exact").alias("tier"), "doc_a", "doc_b"
-    )
-    red = q_emb_lsh_near_dup_exact(spark, sf_dir).select(
-        F.lit("lsh0").alias("tier"), "doc_a", "doc_b"
-    )
-    return ex.unionByName(red)
-
-
-SQL_EMB_NEAR_DUP_MERGED = f"""
-select 'exact' as tier, doc_a, doc_b from ({SQL_EMB_NEAR_DUP})
-union all
-select 'lsh0' as tier, doc_a, doc_b from ({SQL_EMB_LSH_NEAR_DUP_EXACT})
-"""
-
-
 def q_lsh_ann_exact_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-table zero-plane reduction (vid 13) ∪ MULTI-TABLE
     exhaustive-probe reduction (vid 19): with multi_probe == n_planes
@@ -3026,9 +2630,6 @@ def q_stream_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
-SQL_STREAM_EVENT_WINDOWS = SQL_EVENT_WINDOWS
-
-
 # -------------------------------------------------- bench-only timings
 # (not gate entries — the registry sits at the driver's 50-entry
 # verified ceiling; bench.py resolves these via getattr("q_<key>"))
@@ -3059,87 +2660,155 @@ def q_image_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MERGED_QUERIES = {
-    "text_metrics": q_text_metrics,
-    "embedding_near_dup": q_embedding_near_dup_merged,
-    "lsh_ann_exact": q_lsh_ann_exact_merged,
-    "decode_features": q_decode_features_merged,
-    "tree_summarize": q_tree_summarize_merged,
-    "batch_topk": q_batch_topk_merged,
-    "simhash_near_dup": q_simhash_near_dup_merged,
-    "toc_components": q_toc_components_merged,
-    "benchmark_summary": q_benchmark_summary_merged,
-    "ann_approx": q_ann_approx,
-    "sampled_scan": q_sampled_scan,
-    "corpus_meta": q_corpus_meta,
-    "quality_filters": q_quality_filters,
-    "contamination": q_contamination,
-    "k_hop": q_k_hop,
-    "stream_event_windows": q_stream_event_windows,
-}
-_MERGED_ORACLES = {
-    "text_metrics": SQL_TEXT_METRICS,
-    "embedding_near_dup": SQL_EMB_NEAR_DUP_MERGED,
-    "lsh_ann_exact": SQL_LSH_ANN_EXACT_MERGED,
-    "decode_features": SQL_DECODE_FEATURES_MERGED,
-    "tree_summarize": SQL_TREE_SUMMARIZE_MERGED,
-    "batch_topk": SQL_BATCH_TOPK_MERGED,
-    "simhash_near_dup": SQL_SIMHASH_NEAR_DUP_MERGED,
-    "toc_components": SQL_TOC_COMPONENTS_MERGED,
-    "benchmark_summary": SQL_BENCHMARK_SUMMARY_MERGED,
-    # ann_approx: rows-only by design (see docstring)
-    "sampled_scan": SQL_SAMPLED_SCAN,
-    "corpus_meta": SQL_CORPUS_META,
-    "quality_filters": SQL_QUALITY_FILTERS,
-    "contamination": SQL_CONTAMINATION,
-    "k_hop": SQL_K_HOP,
-    "stream_event_windows": SQL_STREAM_EVENT_WINDOWS,
-}
-_RETIRED = [
-    "summary_rule", "topk_cosine", "simhash", "toc_reshape", "span_pr",
-    "lsh_ann", "ivf_ann", "token_stats", "quality_score", "language_id",
-    "fingerprint", "bpe_tokens",
-    "deterministic_sample", "referenced_scan",  # -> sampled_scan
-    "search_corpus", "corpus_toc",  # -> corpus_meta
-    "emb_lsh_near_dup_exact",  # -> embedding_near_dup (round 4)
-]
+# ------------------------------------------------------------ gate table
 
-#: final gate order — the 9 round-2 gate-unverified entries first, the
-#: round-3 additions (quality_filters / contamination / k_hop) next,
-#: then every remaining (merged) entry. 50 entries — AT the driver's
-#: verified-first-50 ceiling (the assert below enforces the cap):
-#: round 5 spent the slot freed by the round-4
-#: emb_lsh_near_dup_exact -> embedding_near_dup merge on
-#: stream_event_windows (the REAL Structured-Streaming twin, oracled
-#: against the batch SQL). ann_approx (the one oracle-less entry)
-#: sits last so its rows-only row is the one at the boundary.
-_GATE_ORDER = [
-    "structure_sequential", "toc_components", "rank_scores",
-    "dedup_groups", "sample_per_group", "pack_sequences", "hash_split",
-    "simhash_near_dup",
-    "quality_filters", "contamination", "k_hop",
-    "split_intro_body", "mention_counts", "triple_extract",
-    "surface_normalize", "entity_link", "cc_components", "tree_agg",
-    "next_prev", "dedup_exact", "dedup_minhash", "ngram_jaccard",
-    "embedding_near_dup", "text_metrics", "salted_degree", "media_meta",
-    "decode_features", "sampled_scan",
-    "event_windows", "json_parse", "search_children_topk",
-    "search_neighbors", "resolve_spans", "rollup_agg", "corpus_meta",
-    "benchmark_validate", "tree_summarize", "align_spans",
-    "corpus_nodes", "vector_attach", "idempotent_ids", "ivf_ann_exact",
-    "lsh_ann_exact", "sessionize", "frame_sample", "batch_topk",
-    "benchmark_summary", "html_decode", "stream_event_windows",
-    "ann_approx",
-]
 
-QUERIES.update(_MERGED_QUERIES)
-ORACLES.update(_MERGED_ORACLES)
-for _k in _RETIRED:
-    QUERIES.pop(_k, None)
-    ORACLES.pop(_k, None)
-assert set(_GATE_ORDER) == set(QUERIES), (
-    sorted(set(_GATE_ORDER) ^ set(QUERIES))
-)
-assert len(_GATE_ORDER) <= 50
-QUERIES = {k: QUERIES[k] for k in _GATE_ORDER}
-ORACLES = {k: ORACLES[k] for k in _GATE_ORDER if k in ORACLES}
+def _union_entry(*parts):
+    """(query, oracle) of a gate entry that unions tagged component
+    outputs. Each part is ``(q_fn, sql, exprs)``: the Spark side runs
+    ``q_fn(...).selectExpr(*exprs)`` and unions the parts by name; the
+    oracle is ``select <exprs> from (sql)`` per part, joined by ``union
+    all``, so ``exprs`` must parse in both Spark SQL and DuckDB (write
+    casts out: ``cast(x as bigint)``, not ``x::bigint``). A part without
+    SQL makes the entry rows-only (oracle ``None``)."""
+
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        dfs = [fn(spark, sf_dir).selectExpr(*exprs) for fn, _, exprs in parts]
+        return functools.reduce(DataFrame.unionByName, dfs)
+
+    if any(sql is None for _, sql, _ in parts):
+        return query, None
+    oracle = "\nunion all\n".join(
+        f"select {', '.join(exprs)} from ({sql})" for _, sql, exprs in parts
+    )
+    return query, oracle
+
+
+# The driver's CORRECTNESS gate verifies the FIRST 50 queries() entries
+# in order, so this table is the gate: (name, query, oracle) rows, at
+# most 50, oracle None for a rows-only entry. Union entries keep every
+# absorbed operator running through its REAL code, each part tagged.
+# ann_approx (the one rows-only entry) sits last, at the boundary.
+# bench.py still times absorbed operators through their q_* functions.
+# Still pytest-only: S4/S5 resume (filesystem snapshot protocol; no SQL
+# analogue) and the F1 non-verbatim fuzzy tail (difflib oracle +
+# hypothesis property tests).
+_GATE = [
+    ("structure_sequential", q_structure_sequential, SQL_STRUCTURE_SEQUENTIAL),
+    # T3 both directions: write-side build_toc ∪ read-side reshape_toc
+    # over the six stored-TOC shape variants
+    ("toc_components", *_union_entry(
+        (q_toc_reshape, SQL_TOC_RESHAPE,
+         ["'w:' || url as key", "toc_json as payload_json"]),
+        (q_toc_components, SQL_TOC_COMPONENTS,
+         ["'r:' || cast(node_id as string) as key",
+          "components_json as payload_json"]),
+    )),
+    ("rank_scores", q_rank_scores, SQL_RANK_SCORES),
+    ("dedup_groups", q_dedup_groups, SQL_DEDUP_GROUPS),
+    ("sample_per_group", q_sample_per_group, SQL_SAMPLE_PER_GROUP),
+    ("pack_sequences", q_pack_sequences, SQL_PACK_SEQUENCES),
+    ("hash_split", q_hash_split, SQL_HASH_SPLIT),
+    # Hamming-near pairs over the planted corpus ∪ per-doc fingerprints
+    ("simhash_near_dup", *_union_entry(
+        (q_simhash_near_dup, SQL_SIMHASH_NEAR_DUP,
+         ["'pair' as kind", "cast(doc_a as bigint) as a",
+          "cast(doc_b as bigint) as b", "cast(hamming as bigint) as v"]),
+        (q_simhash, SQL_SIMHASH,
+         ["'sig' as kind", "cast(doc_id as bigint) as a",
+          "cast(-1 as bigint) as b", "cast(simhash as bigint) as v"]),
+    )),
+    ("quality_filters", q_quality_filters, SQL_QUALITY_FILTERS),
+    ("contamination", q_contamination, SQL_CONTAMINATION),
+    ("k_hop", q_k_hop, SQL_K_HOP),
+    ("split_intro_body", q_split_intro_body, SQL_SPLIT),
+    ("mention_counts", q_mention_counts, SQL_MENTION_COUNTS),
+    ("triple_extract", q_triple_extract, SQL_TRIPLES),
+    ("surface_normalize", q_surface_normalize, SQL_SURFACE_NORM),
+    ("entity_link", q_entity_link, SQL_ENTITY_LINK),
+    ("cc_components", q_cc_components, SQL_CC),
+    ("tree_agg", q_tree_agg, SQL_TREE_AGG),
+    ("next_prev", q_next_prev, SQL_NEXT_PREV),
+    ("dedup_exact", q_dedup_exact, SQL_DEDUP_EXACT),
+    ("dedup_minhash", q_dedup_minhash, SQL_DEDUP_MINHASH),
+    ("ngram_jaccard", q_ngram_jaccard, SQL_NGRAM_JACCARD),
+    # exact broadcast-matmul tier ∪ the LSH tier at n_planes=0 (its
+    # exact reduction), on the same planted pairs
+    ("embedding_near_dup", *_union_entry(
+        (q_embedding_near_dup, SQL_EMB_NEAR_DUP,
+         ["'exact' as tier", "doc_a", "doc_b"]),
+        (q_emb_lsh_near_dup_exact, SQL_EMB_LSH_NEAR_DUP_EXACT,
+         ["'lsh0' as tier", "doc_a", "doc_b"]),
+    )),
+    ("text_metrics", q_text_metrics, SQL_TEXT_METRICS),
+    ("salted_degree", q_salted_degree, SQL_SALTED_DEGREE),
+    ("media_meta", q_media_meta, SQL_MEDIA_META),
+    ("decode_features", q_decode_features_merged, SQL_DECODE_FEATURES_MERGED),
+    # S2 hash-ordered sample ∪ S3 referenced-only corpus scan
+    ("sampled_scan", *_union_entry(
+        (q_deterministic_sample, SQL_DETERMINISTIC_SAMPLE,
+         ["'s:' || cast(doc_id as string) as key", "sample_key as payload"]),
+        (q_referenced_scan, SQL_REFERENCED_SCAN,
+         ["'r:' || cast(doc_id as string) as key",
+          "cast(n_chars as string) as payload"]),
+    )),
+    ("event_windows", q_event_windows, SQL_EVENT_WINDOWS),
+    ("json_parse", q_json_parse, SQL_JSON_PARSE),
+    ("search_children_topk", q_search_children_topk, SQL_SEARCH_CHILDREN),
+    ("search_neighbors", q_search_neighbors, SQL_SEARCH_NEIGHBORS),
+    ("resolve_spans", q_resolve_spans, SQL_RESOLVE_SPANS),
+    ("rollup_agg", q_rollup_agg, SQL_ROLLUP),
+    # Q1 Corpus-label listing ∪ Q2 single-corpus TOC lookup
+    ("corpus_meta", *_union_entry(
+        (q_search_corpus, SQL_SEARCH_CORPUS,
+         ["'c:' || cast(contract_id as string) as key",
+          "contract_name as payload"]),
+        (q_corpus_toc, SQL_CORPUS_TOC,
+         ["'t:' || cast(node_id as string) as key", "toc_json as payload"]),
+    )),
+    ("benchmark_validate", q_benchmark_validate, SQL_BENCHMARK_VALIDATE),
+    # bottom-up level-loop summaries ∪ the summary-else-content rule
+    ("tree_summarize", *_union_entry(
+        (q_tree_summarize, SQL_TREE_SUMMARIZE, ["url", "path_key", "summary"]),
+        (q_summary_rule, SQL_SUMMARY_RULE,
+         ["cast(doc_id as string) as url", "'__summary_rule__' as path_key",
+          "vec_text_md5 as summary"]),
+    )),
+    ("align_spans", q_align_spans, SQL_ALIGN_SPANS),
+    ("corpus_nodes", q_corpus_nodes, SQL_CORPUS_NODES),
+    ("vector_attach", q_vector_attach, SQL_VECTOR_ATTACH),
+    ("idempotent_ids", q_idempotent_ids, SQL_IDEMPOTENT_IDS),
+    ("ivf_ann_exact", q_ivf_ann_exact, SQL_IVF_ANN_EXACT),
+    ("lsh_ann_exact", q_lsh_ann_exact_merged, SQL_LSH_ANN_EXACT_MERGED),
+    ("sessionize", q_sessionize, SQL_SESSIONIZE),
+    ("frame_sample", q_frame_sample, SQL_FRAME_SAMPLE),
+    # many-query scan-once top-k ∪ single-query brute force as qid -7
+    ("batch_topk", *_union_entry(
+        (q_batch_topk, SQL_BATCH_TOPK, ["qid", "id", "rank"]),
+        (q_topk_cosine, SQL_TOPK_COSINE,
+         ["cast(-7 as bigint) as qid", "id", "rank"]),
+    )),
+    # span_overlap_pr per-query rows (n = -1) ∪ the run_benchmark
+    # averages row (query_id = -1)
+    ("benchmark_summary", *_union_entry(
+        (q_span_pr, SQL_SPAN_PR,
+         ["query_id", "precision", "recall", "cast(-1 as bigint) as n"]),
+        (q_benchmark_summary, SQL_BENCHMARK_SUMMARY,
+         ["cast(-1 as bigint) as query_id", "average_precision as precision",
+          "average_recall as recall", "cast(n_queries as bigint) as n"]),
+    )),
+    ("html_decode", q_html_decode, SQL_HTML_DECODE),
+    # the REAL Structured-Streaming twin, oracled by the batch SQL
+    ("stream_event_windows", q_stream_event_windows, SQL_EVENT_WINDOWS),
+    # hyperplane-LSH ∪ IVF top-k: rows-only, their recall is
+    # engine-specific (lsh_ann_exact / ivf_ann_exact are the oracled
+    # exact reductions)
+    ("ann_approx", *_union_entry(
+        (q_lsh_ann, None, ["'lsh' as method", "id", "rank"]),
+        (q_ivf_ann, None, ["'ivf' as method", "id", "rank"]),
+    )),
+]
+assert len(_GATE) <= 50
+
+QUERIES = {name: fn for name, fn, _ in _GATE}
+ORACLES = {name: sql for name, _, sql in _GATE if sql is not None}

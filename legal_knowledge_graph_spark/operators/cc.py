@@ -112,7 +112,8 @@ def connected_components(
     ``component`` is the minimum node id in the node's component.
     Nodes that appear only as isolated vertices in ``edges`` (self
     loops) map to themselves; vertices absent from ``edges`` are the
-    caller's to union in.
+    caller's to union in. Raises ``RuntimeError`` when the distributed
+    loop has not converged after ``max_iter`` rounds.
 
     **Bounded fast path** (round 5 — the CC convergence loop was the
     pipeline's single largest serial-seconds contributor at ~15 s per
@@ -181,6 +182,7 @@ def connected_components(
             "node", F.coalesce("component", F.col("node")).alias("component")
         )
 
+    n_edges = prev[0]
     for _ in range(max_iter):
         e2 = _small_star(_large_star(e)).localCheckpoint(eager=False)
         cur = _checksum(e2)
@@ -188,6 +190,13 @@ def connected_components(
         if cur == prev:
             break
         prev = cur
+    else:
+        # an unsettled edge set is not a forest of stars: its
+        # assignment below would split components
+        raise RuntimeError(
+            f"connected_components did not converge within max_iter={max_iter}"
+            f" rounds ({n_edges} canonical edges)"
+        )
 
     # Converged state is a forest of stars (child -> root = component
     # min). Assignment: min over closed neighborhood.

@@ -3,11 +3,12 @@
 Five tiers:
 
 - **exact**: md5-groupBy on normalized text.
-- **MinHash + LSH**: char-3-gram shingles -> per-permutation min of
-  md5(perm || gram) -> banded keys -> bucket self-join -> exact
-  Jaccard verification of candidates. md5 (not xxhash64) is used as
-  the permutation hash deliberately: it is bit-identical across
-  engines, so the whole LSH pipeline is oracle-checkable in DuckDB.
+- **MinHash + LSH**: char-3-gram shingles -> one md5 per gram, taken
+  as an integer g mod P -> per-permutation min of (a_j*g + b_j) mod P
+  -> banded keys -> bucket self-join -> exact Jaccard verification of
+  candidates. md5 (not xxhash64) is the gram hash deliberately: it is
+  bit-identical across engines, so the whole LSH pipeline is
+  oracle-checkable in DuckDB.
 - **SimHash**: 32-bit fingerprint; per-token md5-derived bits summed
   +1/-1 per position, sign -> bit. Hamming-near pairs via band keys.
 - **n-gram Jaccard**: exact pairwise Jaccard within a blocking key.

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import itertools
 
+import pytest
 from pyspark.sql import functions as F
 
 from legal_knowledge_graph_spark.datagen import (
@@ -82,6 +83,21 @@ def test_cc_driver_fast_path_equals_distributed(spark):
     assert fast == dist
     for n in range(500, 505):
         assert fast[n] == n
+
+
+def test_cc_raises_when_loop_does_not_converge(spark):
+    """A 64-node path needs more large-star/small-star rounds than
+    max_iter=2 allows: the loop must raise rather than return its
+    unsettled state (which split the path into 60 components); with
+    the default max_iter it converges to the one true component."""
+    path = spark.createDataFrame([(i, i + 1) for i in range(63)], ["src", "dst"])
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(path, max_iter=2, driver_cap=0)
+    comps = {
+        r["component"]
+        for r in connected_components(path, driver_cap=0).collect()
+    }
+    assert comps == {0}
 
 
 def test_single_linkage_parity_vs_exact(spark):
