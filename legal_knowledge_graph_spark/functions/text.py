@@ -61,6 +61,14 @@ def token_count(text: Column) -> Column:
     )
 
 
+def lower_tokens(text: Column) -> Column:
+    """Lower-cased whitespace tokens; null and blank text give []."""
+    t = F.trim(F.lower(F.coalesce(text, F.lit(""))))
+    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
+        F.split(t, r"\s+")
+    )
+
+
 def normalize_surface(col: Column) -> Column:
     """Canonical normalization for entity surface forms.
 

@@ -244,11 +244,3 @@ def best_window_by_words(content: str, target_sentence: str) -> tuple[int, int, 
 def find_sentence_range(content: str, start_sentence: str, end_sentence: str) -> tuple[int, int]:
     """One-shot form of DocAligner.sentence_range."""
     return DocAligner(content).sentence_range(start_sentence, end_sentence)
-
-
-def align_many(content: str, sentences: list[tuple[str, str]]) -> list[tuple[int, int]]:
-    """Align many (start_sentence, end_sentence) pairs against one
-    content string — amortizes tokenization across a document's
-    sections (the batched shape used inside the chunker stage)."""
-    aligner = DocAligner(content)
-    return [aligner.sentence_range(s, e) for s, e in sentences]

@@ -44,6 +44,15 @@ Scale notes:
   (pass ``metrics=`` to lsh_candidate_pairs / minhash_near_duplicates)
   and the DuckDB oracle applies the same cap, so capping never makes
   the gate inexact.
+
+Banding is written once, here. A ``(doc_id, band_key)`` table goes
+through :func:`_banded_pairs` (anti-join cap, then the band self-join)
+for the MinHash fallback, entity linking (``linking.candidate_pairs``:
+these shingles and the :func:`_perm_min` aggregate, with an xxhash64
+gram hash) and the embedding LSH tier
+(``similarity.embedding_near_dup_lsh``). Integer fingerprints (SimHash,
+SRP bucket bits) get their keys from :func:`_bit_band_keys`; SimHash
+then pairs inside each bucket's task instead of self-joining.
 """
 
 from __future__ import annotations
@@ -141,7 +150,12 @@ def minhash_signatures(
     bit-identical across engines (the DuckDB oracle reproduces the
     exact signatures)."""
     g = F.conv(F.substring(F.md5(F.col("gram")), 1, 15), 16, 10).cast("long") % MINHASH_P
-    hashed = sh.select("doc_id", g.alias("g"))
+    return _perm_min(sh.select("doc_id", g.alias("g")), n_perm)
+
+
+def _perm_min(hashed: DataFrame, n_perm: int) -> DataFrame:
+    """(doc_id, g) -> (doc_id, h0..h{n-1}), h_j = min((a_j * g + b_j)
+    mod P). The caller picks the gram hash g in [0, P)."""
     aggs = [
         F.min((F.col("g") * F.lit(a) + F.lit(b)) % MINHASH_P).alias(f"h{j}")
         for j, (a, b) in enumerate(_perm_coeffs(n_perm))
@@ -160,6 +174,24 @@ def _band_keys(n_perm: int, bands: int) -> Column:
                 F.concat_ws(
                     "|", F.lit(str(b)), *[F.col(f"h{b * rpb + r}") for r in range(rpb)]
                 )
+                for b in range(bands)
+            ]
+        )
+    ).alias("band_key")
+
+
+def _bit_band_keys(col: str, bands: int, rpb: int) -> Column:
+    """Exploding ``band_key`` column over an integer fingerprint
+    column: band b's key is ``b * 2^max(rpb, 1)`` plus bits
+    ``[b*rpb, (b+1)*rpb)`` of ``col``, so keys of different bands never
+    collide. ``rpb=0`` gives one bucket per band."""
+    return F.explode(
+        F.array(
+            *[
+                (
+                    F.lit(b * (1 << max(rpb, 1)))
+                    + F.shiftright(F.col(col), b * rpb).bitwiseAND(F.lit((1 << rpb) - 1))
+                ).cast("long")
                 for b in range(bands)
             ]
         )
@@ -205,7 +237,13 @@ def lsh_candidate_pairs(
     )
 
 
-def _banded_pairs(banded: DataFrame, max_block: int, metrics: dict | None) -> DataFrame:
+def _banded_pairs(
+    banded: DataFrame, max_block: int, metrics: dict | None = None
+) -> DataFrame:
+    """(doc_id, band_key) -> distinct (doc_a, doc_b), doc_a < doc_b,
+    for docs sharing a band bucket of at most ``max_block`` members.
+    The MinHash fallback, entity linking and the embedding SRP tier
+    all pair through it."""
     if metrics is not None:
         # the metrics count is an EAGER action; checkpoint so it
         # doesn't execute the signature lineage separately from the
@@ -1013,16 +1051,7 @@ def simhash_near_duplicates(
         raise ValueError("pigeonhole soundness needs max_hamming <= bands - 1")
     rpb = SIMHASH_BITS // bands
     fps = simhash(df, id_col, text_col)
-    band_keys = [
-        (
-            F.lit(b * (1 << rpb))
-            + F.shiftright(F.col("simhash"), b * rpb).bitwiseAND(F.lit((1 << rpb) - 1))
-        ).cast("long")
-        for b in range(bands)
-    ]
-    banded = fps.select(
-        "doc_id", "simhash", F.explode(F.array(*band_keys)).alias("band_key")
-    )
+    banded = fps.select("doc_id", "simhash", _bit_band_keys("simhash", bands, rpb))
     # sort by struct = sort by doc_id (unique within a bucket: band_key
     # values from different bands never collide), so doc_a < doc_b
     # falls out of position order

@@ -5,10 +5,11 @@ clustering (reference: utils/cluster.py:4-26), per the north star:
 
 1. **Normalize** surfaces natively (lower, suffix unification) — the
    exact-match tier collapses case/suffix variants for free.
-2. **Block** with MinHash-LSH over character 3-gram shingles — built
-   directly on DataFrame ops (explode shingles -> per-permutation min
-   of xxhash64 -> band keys -> self-join on band key). Deterministic,
-   no fitted model, no pyspark.ml dependency.
+2. **Block** with MinHash-LSH over character 3-gram shingles, using
+   dedup's primitives: ``shingles`` -> one xxhash64 per gram -> the
+   shared permutation-min aggregate -> ``lsh_candidate_pairs`` (band
+   keys, bucket cap, self-join on band key). Deterministic, no fitted
+   model, no pyspark.ml dependency.
 3. **Score** candidate pairs with ``difflib.SequenceMatcher.ratio``
    (the same family as the F1 alignment kernel) in a batched Arrow
    stage; keep pairs with ratio >= threshold as edges.
@@ -20,9 +21,9 @@ Scale design:
   the mention table (trillions of rows at 10^12 docs) is reduced with
   one map-side-combinable ``distinct`` before any pairwise work.
 - band buckets are capped (``max_block``): a stop-surface bucket of B
-  members would otherwise emit B^2 pairs. Dropped buckets are
-  countable on demand (pass ``metrics=`` to candidate_pairs /
-  link_entities).
+  members would otherwise emit B^2 pairs. The cap is dedup's
+  ``_banded_pairs``; ``dedup.lsh_candidate_pairs(metrics=)`` counts
+  the dropped buckets of a signature table when needed.
 - the canonical map output is small (distinct surfaces), so consumers
   broadcast it against the triple table — the big table never
   shuffles for canonicalization.
@@ -41,6 +42,13 @@ from pyspark.sql import types as T
 
 from legal_knowledge_graph_spark.functions.text import normalize_surface
 from legal_knowledge_graph_spark.operators.cc import connected_components
+from legal_knowledge_graph_spark.operators.dedup import (
+    MINHASH_P,
+    _perm_min,
+    embedding_near_duplicates,
+    lsh_candidate_pairs,
+    shingles,
+)
 
 DEFAULT_BANDS = 8
 DEFAULT_ROWS_PER_BAND = 2
@@ -48,22 +56,11 @@ DEFAULT_RATIO_THRESHOLD = 0.84
 DEFAULT_MAX_BLOCK = 64
 
 
-def surface_shingles(df: DataFrame, col: str = "surface_norm") -> DataFrame:
-    """(surface_norm) -> exploded distinct (surface_norm, gram) char
-    3-grams; strings shorter than 3 contribute themselves."""
-    grams = F.when(
-        F.length(col) >= 3,
-        F.expr(f"transform(sequence(0, length({col}) - 3), i -> substring({col}, i + 1, 3))"),
-    ).otherwise(F.array(F.col(col)))
-    return df.select(col, F.explode(F.array_distinct(grams)).alias("gram"))
-
-
 def candidate_pairs(
     surfaces: DataFrame,
     bands: int = DEFAULT_BANDS,
     rows_per_band: int = DEFAULT_ROWS_PER_BAND,
     max_block: int = DEFAULT_MAX_BLOCK,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """surfaces(surface_norm) -> (left, right) candidate pairs.
 
@@ -71,62 +68,17 @@ def candidate_pairs(
     candidate if all minhashes of any band agree. Returns normalized
     surface string pairs with left < right.
 
-    Signatures use ONE xxhash64 per gram + integer permutations
-    ``(a_j * g + b_j) mod P`` (the scheme dedup.minhash_signatures
-    uses) — ~n_perm x cheaper than hashing every (gram, j) pair, with
-    the same collision behavior.
+    The shingles, the permutation-min signatures and the capped band
+    self-join are dedup's; only the gram hash differs: one xxhash64 per
+    gram (dedup uses md5, which its DuckDB oracle reproduces).
     """
-    from legal_knowledge_graph_spark.operators.dedup import MINHASH_P, _perm_coeffs
-
-    shingled = surface_shingles(surfaces)
     n_perm = bands * rows_per_band
+    sh = shingles(surfaces, "surface_norm", "surface_norm")
     g = F.pmod(F.xxhash64(F.col("gram")), F.lit(MINHASH_P))
-    hashed = shingled.select("surface_norm", g.alias("g"))
-    aggs = [
-        F.min((F.col("g") * F.lit(a) + F.lit(b)) % MINHASH_P).alias(f"h{j}")
-        for j, (a, b) in enumerate(_perm_coeffs(n_perm))
-    ]
-    sigs = hashed.groupBy("surface_norm").agg(*aggs)
-
-    band_keys = [
-        F.xxhash64(
-            F.lit(b), *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        )
-        for b in range(bands)
-    ]
-    banded = sigs.select(
-        "surface_norm", F.explode(F.array(*band_keys)).alias("band_key")
+    sigs = _perm_min(sh.select("doc_id", g.alias("g")), n_perm)
+    return lsh_candidate_pairs(sigs, n_perm, bands, max_block).select(
+        F.col("doc_a").alias("left"), F.col("doc_b").alias("right")
     )
-
-    # Cap pathological buckets (stop-surface blocks). Drops are
-    # counted on demand via ``metrics`` (one extra tiny aggregation).
-    sizes = banded.groupBy("band_key").agg(F.count(F.lit(1)).alias("bs"))
-    if metrics is not None:
-        dropped = (
-            sizes.where(F.col("bs") > max_block)
-            .agg(
-                F.count(F.lit(1)).alias("nb"),
-                F.coalesce(F.sum("bs"), F.lit(0)).alias("nr"),
-            )
-            .first()
-        )
-        metrics["dropped_buckets"] = int(dropped["nb"])
-        metrics["dropped_rows"] = int(dropped["nr"])
-    # anti-join cap (same rationale as dedup._banded_pairs: the inner
-    # size join shuffled the banded table a second time; broadcast not
-    # forced — the oversized set is data-dependent, AQE decides)
-    oversized = sizes.where(F.col("bs") > max_block).select("band_key")
-    banded = banded.join(oversized, "band_key", "left_anti")
-
-    left = banded.select("band_key", F.col("surface_norm").alias("left"))
-    right = banded.select("band_key", F.col("surface_norm").alias("right"))
-    pairs = (
-        left.join(right, "band_key")
-        .where(F.col("left") < F.col("right"))
-        .select("left", "right")
-        .distinct()
-    )
-    return pairs
 
 
 _PAIR_SCHEMA = T.StructType(
@@ -210,7 +162,6 @@ def link_entities(
     bands: int = DEFAULT_BANDS,
     rows_per_band: int = DEFAULT_ROWS_PER_BAND,
     max_block: int = DEFAULT_MAX_BLOCK,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """mentions(url, surface, ...) -> canonical map
     (surface_norm, canonical_id, component).
@@ -235,7 +186,7 @@ def link_entities(
     # stable numeric node ids for CC
     with_id = surfaces.withColumn("sid", F.xxhash64("surface_norm"))
 
-    pairs = candidate_pairs(surfaces, bands, rows_per_band, max_block, metrics)
+    pairs = candidate_pairs(surfaces, bands, rows_per_band, max_block)
     edges_str = score_pairs(pairs, threshold=ratio_threshold)
 
     sid_map = with_id.select("surface_norm", "sid")
@@ -284,10 +235,6 @@ def cluster_entity_vectors(
     (merge while distance < tau), so the edge rule is
     ``similarity > 1 - tau``.
     """
-    from legal_knowledge_graph_spark.operators.dedup import (
-        embedding_near_duplicates,
-    )
-
     ids = entities.select(F.col(id_col).alias("node"))
     # similarity strictly greater than 1 - tau (see note above):
     # embedding_near_duplicates uses >=, so nudge by the smallest

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from legal_knowledge_graph_spark.functions.text import lower_tokens
+
 #: ASCII-only PII patterns, identical semantics in Java regex and RE2.
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_RE = r"\b[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}\b"
@@ -51,13 +53,6 @@ _MAX_MULT_SQL = (
 )
 
 
-def _tokens(text: Column) -> Column:
-    t = F.trim(F.lower(F.coalesce(text, F.lit(""))))
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
-    )
-
-
 def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, n_lines, dup_line_frac_x1000, n_bigrams,
     top_bigram_count, top_bigram_frac_x1000, distinct_token_ratio_x1000).
@@ -76,7 +71,7 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         F.col(id_col).alias("doc_id"),
         F.size(lines).cast("long").alias("_n_lines"),
         (F.size(lines) - F.size(F.array_distinct(lines))).cast("long").alias("_dup_lines"),
-        _tokens(F.col(text_col)).alias("_toks"),
+        lower_tokens(F.col(text_col)).alias("_toks"),
     ).withColumn(
         "_bg",
         F.when(
@@ -167,13 +162,13 @@ def ngram_contamination(
     """
     from legal_knowledge_graph_spark.functions.partitioning import ensure_parallel
 
-    bench_staged = bench.select(_tokens(F.col(bench_text_col)).alias("_t")).withColumn(
+    bench_staged = bench.select(lower_tokens(F.col(bench_text_col)).alias("_t")).withColumn(
         "_g", _word_ngrams("_t", n)
     )
     bench_grams_df = bench_staged.select(F.explode("_g").alias("gram")).distinct()
 
     doc_toks = ensure_parallel(
-        docs.select(F.col(id_col).alias("doc_id"), _tokens(F.col(text_col)).alias("_t"))
+        docs.select(F.col(id_col).alias("doc_id"), lower_tokens(F.col(text_col)).alias("_t"))
     )
 
     # count-guard-then-collect: the eval set is tiny by contract, but

@@ -12,6 +12,11 @@ Two paths:
 Both are pure DataFrame ops. Batched many-query search is a
 broadcast join of the (small) query set against the vector table —
 the big table never shuffles.
+
+Near-duplicate pairs at scale (``embedding_near_dup_lsh``) band the
+same bucket bits with dedup's ``_bit_band_keys`` and pair vectors
+through dedup's ``_banded_pairs``; this module has no band self-join
+or bucket cap of its own.
 """
 
 from __future__ import annotations
@@ -19,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from legal_knowledge_graph_spark.operators.dedup import _banded_pairs, _bit_band_keys
 from legal_knowledge_graph_spark.operators.query import cosine
 from legal_knowledge_graph_spark.operators.summarize import hash_token
 
@@ -293,11 +299,12 @@ def embedding_near_dup_lsh(
     max_block: int = 2000,
 ) -> DataFrame:
     """Approximate embedding near-dup pairs at ANY scale: band the
-    sign-random-projection bits (like the SimHash tier — cosine-close
-    vectors agree on most sign bits, so they collide in >= 1 band with
-    high probability), self-join within capped band buckets, then
-    verify candidates with the exact native cosine. Returns
-    (doc_a, doc_b, score) with score >= threshold.
+    sign-random-projection bits with the SimHash tier's bit-band keys
+    (cosine-close vectors agree on most sign bits, so they collide in
+    >= 1 band with high probability), pair docs within capped band
+    buckets through dedup's ``_banded_pairs``, then verify candidates
+    with the exact native cosine. Returns (doc_a, doc_b, score) with
+    score >= threshold.
 
     This is the scale path the exact broadcast tier
     (dedup.embedding_near_duplicates) points to above its byte cap: no
@@ -310,25 +317,8 @@ def embedding_near_dup_lsh(
     b = lsh_bucket(vectors, vec_col, dim, n_planes).select(
         F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v"), "lsh_bucket"
     )
-    band_keys = [
-        (
-            F.lit(bi * (1 << max(rpb, 1)))
-            + F.shiftright(F.col("lsh_bucket"), bi * rpb).bitwiseAND(
-                F.lit((1 << rpb) - 1 if rpb else 0)
-            )
-        ).cast("long")
-        for bi in range(bands)
-    ]
-    banded = b.select("doc_id", F.explode(F.array(*band_keys)).alias("band_key"))
-    sizes = banded.groupBy("band_key").agg(F.count(F.lit(1)).alias("bs"))
-    banded = banded.join(sizes, "band_key").where(F.col("bs") <= max_block).drop("bs")
-    aa = banded.select("band_key", F.col("doc_id").alias("doc_a"))
-    bb = banded.select("band_key", F.col("doc_id").alias("doc_b"))
-    cand = (
-        aa.join(bb, "band_key")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+    cand = _banded_pairs(
+        b.select("doc_id", _bit_band_keys("lsh_bucket", bands, rpb)), max_block
     )
     va = b.select(F.col("doc_id").alias("doc_a"), F.col("v").alias("va"))
     vb = b.select(F.col("doc_id").alias("doc_b"), F.col("v").alias("vb"))
@@ -481,9 +471,7 @@ def ivf_assign(vectors: DataFrame, vec_col: str, centroids: list[list[float]]) -
             out["ivf_cell"] = cells
             yield out
 
-    from legal_knowledge_graph_spark.functions.partitioning import ensure_parallel
-
-    return ensure_parallel(vectors).mapInPandas(run, schema)
+    return vectors.mapInPandas(run, schema)
 
 
 def ivf_top_k(

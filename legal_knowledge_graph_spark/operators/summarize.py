@@ -283,28 +283,3 @@ def hash_token(tok: str) -> int:
     for b in tok.encode("utf-8"):
         h = ((h ^ b) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
     return h
-
-
-def with_embeddings(
-    df: DataFrame, text_col: str, key_cols: list[str], dim: int = DEFAULT_EMBED_DIM
-) -> DataFrame:
-    """(keys..., text_col) -> (keys..., vector array<float>). Pure map
-    stage (mapInPandas), Arrow-batched — the reference's batch_embed
-    (database.py:32-38) without the per-node UPDATE round trips."""
-    schema = T.StructType(
-        [df.schema[k] for k in key_cols]
-        + [T.StructField("vector", T.ArrayType(T.FloatType()), False)]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vecs = embed_texts_np(list(pdf[text_col].fillna("")), dim)
-            out = pdf[key_cols].copy()
-            out["vector"] = [v for v in vecs]
-            yield out
-
-    from legal_knowledge_graph_spark.functions.partitioning import ensure_parallel
-
-    return ensure_parallel(
-        df.select(*dict.fromkeys(key_cols + [text_col]))
-    ).mapInPandas(run, schema)

@@ -16,8 +16,10 @@ All pure native expressions (whole-stage codegen; zero Python):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from legal_knowledge_graph_spark.functions.text import lower_tokens
 
 # Tiny per-language stopword marker sets: common words that are
 # near-unique to the language among the supported set.
@@ -31,17 +33,10 @@ LANG_MARKERS: dict[str, list[str]] = {
 EN_STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "that", "for"]
 
 
-def _tokens(text: Column) -> Column:
-    t = F.trim(F.lower(F.coalesce(text, F.lit(""))))
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
-    )
-
-
 def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, n_tokens, n_chars, avg_token_len_x100). Integer-only
     outputs (avg scaled by 100, floored) for engine portability."""
-    toks = _tokens(F.col(text_col))
+    toks = lower_tokens(F.col(text_col))
     n_tokens = F.size(toks)
     n_chars = F.length(F.coalesce(F.col(text_col), F.lit("")))
     total_tok_chars = F.aggregate(
@@ -65,7 +60,7 @@ def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         has >= ~20% stopwords)
       - punct sanity: 1 - min(punct_chars/n_chars * 5, 1)
     Output scaled to integer x1000 (portable hashing)."""
-    toks = _tokens(F.col(text_col))
+    toks = lower_tokens(F.col(text_col))
     n_tokens = F.size(toks).cast("double")
     n_chars = F.greatest(F.length(F.coalesce(F.col(text_col), F.lit(""))).cast("double"), F.lit(1.0))
     sw = F.array(*[F.lit(w) for w in EN_STOPWORDS])
@@ -95,7 +90,7 @@ def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def language_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, lang_pred, lang_hits): argmax language by marker-word
     hits; ties broken by language code order; 'und' when zero hits."""
-    toks = _tokens(F.col(text_col))
+    toks = lower_tokens(F.col(text_col))
     out = df.select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
     hit_cols = []
     for lang, words in sorted(LANG_MARKERS.items()):

@@ -3,6 +3,7 @@ and the end-to-end triple P/R >= 0.95 gate (FIXTURES.md F3/F4)."""
 
 from __future__ import annotations
 
+import hashlib
 import itertools
 
 import pytest
@@ -328,3 +329,31 @@ def test_score_pairs_pruned_equals_unpruned(spark):
             for r in score_pairs(pairs, threshold=thr).collect()
         }
         assert pruned == exact
+
+
+def _digest(df):
+    rows = sorted(tuple(str(v) for v in r) for r in df.collect())
+    return len(rows), hashlib.sha1(repr(rows).encode()).hexdigest()[:10]
+
+
+def test_lsh_blocking_rows_pinned(spark):
+    """Linking blocks through dedup's LSH primitives (shingles, the
+    permutation-min signatures, the capped band self-join) with an
+    xxhash64 gram hash. Its rows are pinned on 200 seeded pages: the
+    candidate pairs under the default bucket cap and under a cap of 3
+    (which drops most buckets), and the canonical map built on them."""
+    from legal_knowledge_graph_spark.functions.text import normalize_surface
+    from legal_knowledge_graph_spark.operators.linking import candidate_pairs
+
+    mentions = detect_mentions(
+        extract_text(generate_pages(spark, 200, seed=7))
+    ).localCheckpoint()
+    surfaces = (
+        mentions.select(normalize_surface(F.col("surface")).alias("surface_norm"))
+        .where(F.length("surface_norm") > 0)
+        .distinct()
+        .localCheckpoint()
+    )
+    assert _digest(candidate_pairs(surfaces)) == (14808, "7bf93c1a79")
+    assert _digest(candidate_pairs(surfaces, max_block=3)) == (534, "57ac738f4e")
+    assert _digest(link_entities(mentions)) == (665, "4215ce3c2a")

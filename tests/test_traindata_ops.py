@@ -211,8 +211,8 @@ def test_jaccard_tiers_with_repeated_ids_match_oracles(spark, docs):
 
 def test_emb_lsh_near_dup_scale_path(spark, embs):
     """The SRP-banded near-dup scale path: zero false positives (exact
-    cosine verify), and the n_planes=0 reduction equals the exact
-    broadcast tier."""
+    cosine verify), the n_planes=0 reduction equals the exact
+    broadcast tier, and the bucket cap applies."""
     from legal_knowledge_graph_spark.operators.similarity import (
         embedding_near_dup_lsh,
     )
@@ -235,6 +235,12 @@ def test_emb_lsh_near_dup_scale_path(spark, embs):
         ).collect()
     }
     assert red == exact
+    # band buckets here hold 2-47 members; a cap of 5 drops every
+    # bucket that held a pair above the threshold
+    capped = embedding_near_dup_lsh(
+        sub, "vid", "embedding", dim, threshold=0.35, max_block=5
+    )
+    assert capped.count() == 0
 
 
 def test_ivf_training_sample_cap_is_dim_aware(spark, embs):
