@@ -23,6 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: rounds of the large-star/small-star loop before it gives up
+MAX_ITER = 25
+#: canonical edges the driver union-find fast path takes (<= 16 MB)
+DRIVER_CAP = 1_000_000
+
 
 def _canonical_edges(edges: DataFrame) -> DataFrame:
     return (
@@ -104,22 +109,20 @@ def _driver_union_find(rows) -> list[tuple]:
     return [(n, root_min[find(n)]) for n in parent]
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 25, driver_cap: int = 1_000_000
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src: long, dst: long) -> (node: long, component: long).
 
     ``component`` is the minimum node id in the node's component.
     Nodes that appear only as isolated vertices in ``edges`` (self
     loops) map to themselves; vertices absent from ``edges`` are the
     caller's to union in. Raises ``RuntimeError`` when the distributed
-    loop has not converged after ``max_iter`` rounds.
+    loop has not converged after ``MAX_ITER`` rounds.
 
     **Bounded fast path** (round 5 — the CC convergence loop was the
     pipeline's single largest serial-seconds contributor at ~15 s per
     run, measured by the 2-vs-8-core stage decomposition): the
     convergence checksum already counts the canonical edge set, so
-    when it fits ``driver_cap`` the components are solved with driver
+    when it fits ``DRIVER_CAP`` the components are solved with driver
     union-find over ONE bounded collect (≤ 16 MB at the 1M-edge
     default) and broadcast back — zero iteration rounds, zero
     per-round driver latency. Above the cap the large-star/small-star
@@ -153,7 +156,7 @@ def connected_components(
     if prev[0] == 0:
         return nodes.select("node", F.col("node").alias("component"))
 
-    if prev[0] <= driver_cap:
+    if prev[0] <= DRIVER_CAP:
         # the checksum materialized the checkpoint, so this fetch reads
         # executor-cached blocks — bounded by construction. Arrow path
         # (toPandas) rather than collect(): 1M Row objects cost 10-20x
@@ -183,7 +186,7 @@ def connected_components(
         )
 
     n_edges = prev[0]
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         e2 = _small_star(_large_star(e)).localCheckpoint(eager=False)
         cur = _checksum(e2)
         e = e2
@@ -194,7 +197,7 @@ def connected_components(
         # an unsettled edge set is not a forest of stars: its
         # assignment below would split components
         raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter}"
+            f"connected_components did not converge within MAX_ITER={MAX_ITER}"
             f" rounds ({n_edges} canonical edges)"
         )
 

@@ -53,6 +53,11 @@ gram hash) and the embedding LSH tier
 (``similarity.embedding_near_dup_lsh``). Integer fingerprints (SimHash,
 SRP bucket bits) get their keys from :func:`_bit_band_keys`; SimHash
 then pairs inside each bucket's task instead of self-joining.
+
+The bucket-local tiers (the MinHash and n-gram fast paths, SimHash)
+split buckets into ``UNIT_ROWS``-row units with :func:`_bucket_units`
+and pair them in the one loop :func:`_map_unit_pairs`; each keeps only
+its own verify.
 """
 
 from __future__ import annotations
@@ -76,7 +81,11 @@ SIMHASH_BITS = 32
 MAX_VOCAB = 1 << 16
 MAX_DOCS = 1_000_000
 MAX_MASK_BYTES = 1 << 28
-NGRAM_CHUNK = 192  # block rows per n-gram verify unit
+UNIT_ROWS = 192  # bucket rows (i values) per bucket-local verify unit
+FLUSH_PAIRS = 1 << 20  # pairs per verify call: bounds its temporaries
+# exact embedding tier: row and byte caps of the broadcast vector set
+EMB_MAX_BROADCAST_ROWS = 2_000_000
+EMB_MAX_BROADCAST_BYTES = 1 << 31
 
 
 def _norm_text(col: Column) -> Column:
@@ -648,21 +657,98 @@ def _swar_popcount_rows(x):
     return ((x * c01) >> s56).sum(axis=1).astype("int64")
 
 
-def _verify_units_jaccard(
-    units: DataFrame,
-    doc_field,
-    br,
-    threshold: float,
+def _bucket_units(
+    grouped: DataFrame, cols: list, max_block: int | None = None
 ) -> DataFrame:
-    """Enumerate pairs INSIDE each unit row (ids sorted asc; i-range
-    [lo, hi)) against the broadcast mask matrix and emit only pairs
-    with jaccard >= threshold. The size-ratio prefilter (lossless:
-    J <= min|.|/max|.|) skips popcounts that cannot pass."""
+    """Work units of the bucket-local verifiers (the MinHash and n-gram
+    fast paths, SimHash). ``grouped`` holds one row per bucket: its
+    members sorted by doc_id and their count ``bs``. Each bucket of at
+    least 2 (and, given ``max_block``, at most ``max_block``) members
+    becomes one row of ``cols`` plus an i-range ``[lo, hi)`` per
+    ``UNIT_ROWS`` members; the pairs ``i in [lo, hi), j > i`` of a
+    bucket's units are the bucket's pairs, each once."""
+    bs = F.col("bs")
+    keep = bs >= 2 if max_block is None else (bs >= 2) & (bs <= max_block)
+    chunks = F.sequence(F.lit(0), F.ceil((bs - 1) / F.lit(UNIT_ROWS)).cast("long") - 1)
+    lo = F.col("ci") * UNIT_ROWS
+    return (
+        grouped.where(keep)
+        .select(*cols, "bs", F.explode(chunks).alias("ci"))
+        .withColumns({"lo": lo, "hi": F.least(lo + UNIT_ROWS, bs - 1)})
+        .drop("ci", "bs")
+        # round-robin spread: unit rows are tiny but each fans out to
+        # O(UNIT_ROWS * bs) pairs, so AQE's byte-based coalescing of the
+        # shuffle would run the verify serially
+        .repartition(grouped.sparkSession.sparkContext.defaultParallelism)
+    )
+
+
+def _pair_index(m: int, lo: int, hi: int):
+    """Member positions ``(ia, ib)`` of the pairs ``lo <= i < hi``,
+    ``i < j < m`` of an m-member unit, i-major."""
+    import numpy as np
+
+    i_idx = np.arange(lo, hi, dtype=np.int64)
+    reps = m - 1 - i_idx
+    ia = np.repeat(i_idx, reps)
+    ib = np.arange(len(ia), dtype=np.int64) - np.repeat(
+        np.cumsum(reps) - reps - i_idx - 1, reps
+    )
+    return ia, ib
+
+
+def _map_unit_pairs(
+    units: DataFrame, schema, setup, pair_cols=("ids",), unit_cols=()
+) -> DataFrame:
+    """The pair loop of the bucket-local verifiers, over
+    :func:`_bucket_units` rows. Per task, ``setup()`` returns
+    ``(verify, whole)``. Each unit's pairs gather every ``pair_cols``
+    member array (``ids`` first) on both sides and repeat every
+    ``unit_cols`` value; ``verify`` takes about ``FLUSH_PAIRS`` pairs at
+    a time, as arrays ``a0, b0, a1, b1, ..., unit values...``, and
+    returns their output frame. ``whole(ids, lo, hi)``, if given, may
+    take a unit whole and return its frame, or None to pair it."""
     from typing import Iterator
 
     import numpy as np
     import pandas as pd
 
+    cols = (*pair_cols, *unit_cols)
+    n_pair = len(pair_cols)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        verify, whole = setup()
+        for pdf in batches:
+            acc, acc_n = [], 0
+            for lo, hi, *vals in zip(pdf["lo"], pdf["hi"], *(pdf[c] for c in cols)):
+                arrs = [np.asarray(v) for v in vals[:n_pair]]
+                m = len(arrs[0])
+                lo, hi = int(lo), int(min(hi, m - 1))
+                out = whole(arrs[0], lo, hi) if whole else None
+                if out is not None:
+                    yield out
+                    continue
+                ia, ib = _pair_index(m, lo, hi)
+                acc.append(
+                    [a[x] for a in arrs for x in (ia, ib)]
+                    + [np.full(len(ia), v) for v in vals[n_pair:]]
+                )
+                acc_n += len(ia)
+                if acc_n >= FLUSH_PAIRS:
+                    yield verify(*(np.concatenate(c) for c in zip(*acc)))
+                    acc, acc_n = [], 0
+            if acc:
+                yield verify(*(np.concatenate(c) for c in zip(*acc)))
+
+    return units.mapInPandas(run, schema)
+
+
+def _verify_units_jaccard(
+    units: DataFrame, doc_field, br, threshold: float
+) -> DataFrame:
+    """Verify each unit's pairs against the broadcast mask matrix and
+    emit only pairs with jaccard >= threshold. The size-ratio prefilter
+    (lossless: J <= min|.|/max|.|) skips popcounts that cannot pass."""
     from pyspark.sql import types as T
 
     b_map, b_M, b_sz, int_ids = br
@@ -675,17 +761,19 @@ def _verify_units_jaccard(
         ]
     )
 
-    flush_pairs = 1 << 20  # bound per-flush gather/popcount temporaries
-    # GEMM switch: a big unit (a whole ngram block, a stop-text band
-    # bucket) computes ALL its pairwise intersections as ONE float32
-    # matrix product over the unpacked 0/1 mask rows instead of a
-    # per-pair mask gather + SWAR popcount — exact (counts <= vocab <=
-    # 2^16 << 2^24, the float32 integer range) and BLAS-fast. Small
+    # GEMM switch: a big unit (a chunk of a big ngram block or of a
+    # stop-text band bucket) computes ALL its pairwise intersections as
+    # ONE float32 matrix product over the unpacked 0/1 mask rows instead
+    # of a per-pair mask gather + SWAR popcount — exact (counts <= vocab
+    # <= 2^16 << 2^24, the float32 integer range) and BLAS-fast. Small
     # units keep the pairwise path (GEMM setup would dominate).
     gemm_min_pairs = 1 << 14
     gemm_budget_floats = 1 << 26  # 256 MB float32 operand ceiling
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def setup():
+        import numpy as np
+        import pandas as pd
+
         MM, SZ, mapping = b_M.value, b_sz.value, b_map.value
         unpack_cols = MM.shape[1] * 64
         if int_ids:
@@ -720,7 +808,10 @@ def _verify_units_jaccard(
                 }
             )
 
-        def gemm_unit(ids_arr: "np.ndarray", lo: int, hi: int) -> "pd.DataFrame":
+        def gemm_unit(ids_arr: "np.ndarray", lo: int, hi: int):
+            m = len(ids_arr)
+            if (hi - lo) * m < gemm_min_pairs or m * unpack_cols > gemm_budget_floats:
+                return None
             rows = to_rows(ids_arr)
             G = np.unpackbits(
                 MM[rows].view(np.uint8), axis=1, bitorder="little"
@@ -734,7 +825,7 @@ def _verify_units_jaccard(
             union = sa[:, None] + sb[None, :] - inter
             keep = inter >= threshold * union
             # only pairs with j strictly after i (ids sorted asc)
-            keep &= np.arange(len(ids_arr))[None, :] > np.arange(lo, hi)[:, None]
+            keep &= np.arange(m)[None, :] > np.arange(lo, hi)[:, None]
             ri, cj = np.nonzero(keep)
             return pd.DataFrame(
                 {
@@ -745,39 +836,17 @@ def _verify_units_jaccard(
                 }
             )
 
-        for pdf in batches:
-            acc_a, acc_b, acc_n = [], [], 0
-            for ids, lo, hi in zip(pdf["ids"], pdf["lo"], pdf["hi"]):
-                ids_arr = np.asarray(ids)
-                m = len(ids_arr)
-                lo, hi = int(lo), int(min(hi, m - 1))
-                if hi <= lo:
-                    continue
-                if (
-                    (hi - lo) * m >= gemm_min_pairs
-                    and m * unpack_cols <= gemm_budget_floats
-                ):
-                    yield gemm_unit(ids_arr, lo, hi)
-                    continue
-                i_idx = np.arange(lo, hi, dtype=np.int64)
-                reps = m - 1 - i_idx
-                ia = np.repeat(i_idx, reps)
-                cum = np.cumsum(reps) - reps
-                ib = (
-                    np.arange(reps.sum(), dtype=np.int64)
-                    - np.repeat(cum, reps)
-                    + np.repeat(i_idx + 1, reps)
-                )
-                acc_a.append(ids_arr[ia])
-                acc_b.append(ids_arr[ib])
-                acc_n += len(ia)
-                if acc_n >= flush_pairs:
-                    yield verify(np.concatenate(acc_a), np.concatenate(acc_b))
-                    acc_a, acc_b, acc_n = [], [], 0
-            if acc_a:
-                yield verify(np.concatenate(acc_a), np.concatenate(acc_b))
+        return verify, gemm_unit
 
-    return units.mapInPandas(run, out_schema)
+    return _map_unit_pairs(units, out_schema, setup)
+
+
+def _sorted_members(df: DataFrame, key: str) -> DataFrame:
+    """(key, ids, bs): each ``key``'s doc_ids, sorted, and their count."""
+    return df.groupBy(key).agg(
+        F.sort_array(F.collect_list("doc_id")).alias("ids"),
+        F.count(F.lit(1)).alias("bs"),
+    )
 
 
 def _minhash_fast(
@@ -798,27 +867,11 @@ def _minhash_fast(
     if fast is None:
         return None
     stats, br = fast
-    buckets = (
-        stats.select("doc_id", _band_keys(n_perm, bands))
-        .groupBy("band_key")
-        .agg(
-            F.sort_array(F.collect_list("doc_id")).alias("ids"),
-            F.count(F.lit(1)).alias("bs"),
-        )
-    )
+    buckets = _sorted_members(stats.select("doc_id", _band_keys(n_perm, bands)), "band_key")
     if metrics is not None:
         buckets = buckets.localCheckpoint(eager=False)
         _count_dropped(buckets, max_block, metrics)
-    units = (
-        buckets.where((F.col("bs") >= 2) & (F.col("bs") <= max_block))
-        .select(
-            "ids", F.lit(0).cast("long").alias("lo"), (F.col("bs") - 1).alias("hi")
-        )
-        # round-robin spread: the unit rows are tiny, so AQE would
-        # coalesce the bucket shuffle to ~1 partition and the verify
-        # (which fans each row out to O(bs^2) pairs) would run serially
-        .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    )
+    units = _bucket_units(buckets, ["ids"], max_block)
     verified = _verify_units_jaccard(units, stats.schema["doc_id"], br, threshold)
     # a pair sharing several band buckets is verified in each of them
     return verified.distinct()
@@ -834,40 +887,15 @@ def _ngram_fast(
 ) -> DataFrame | None:
     """Bounded-vocab blocked-Jaccard tier: block pair enumeration is
     LOCAL to the verify task (the O(block^2) pair table never touches
-    an exchange); big blocks are split into i-range chunks of
-    ``NGRAM_CHUNK`` rows for parallelism. None -> distributed
-    fallback (see :func:`_fast_stats`)."""
+    an exchange). None -> distributed fallback (see
+    :func:`_fast_stats`)."""
     base = ensure_parallel(df)
     fast = _fast_stats(_norm_docs(base, id_col, text_col), k, 0)
     if fast is None:
         return None
     stats, br = fast
-    bl = (
-        base.select(F.col(id_col).alias("doc_id"), F.col(block_col).alias("blk"))
-        .where(F.col("blk").isNotNull())
-        .groupBy("blk")
-        .agg(
-            F.sort_array(F.collect_list("doc_id")).alias("ids"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .where(F.col("n") >= 2)
-    )
-    units = bl.select(
-        "ids",
-        "n",
-        F.explode(
-            F.sequence(
-                F.lit(0), F.ceil((F.col("n") - 1) / F.lit(NGRAM_CHUNK)).cast("long") - 1
-            )
-        ).alias("ci"),
-    ).select(
-        "ids",
-        (F.col("ci") * NGRAM_CHUNK).alias("lo"),
-        F.least(F.col("ci") * NGRAM_CHUNK + NGRAM_CHUNK, F.col("n") - 1).alias("hi"),
-    ).repartition(df.sparkSession.sparkContext.defaultParallelism)
-    # (round-robin spread — same rationale as the minhash units: each
-    # row expands to O(chunk * block) pairs, so AQE's byte-based
-    # coalescing of the tiny unit rows would serialize the verify)
+    blocks = base.select(F.col(id_col).alias("doc_id"), F.col(block_col).alias("blk"))
+    units = _bucket_units(_sorted_members(blocks.where(F.col("blk").isNotNull()), "blk"), ["ids"])
     return _verify_units_jaccard(units, stats.schema["doc_id"], br, min_jaccard)
 
 
@@ -1030,21 +1058,17 @@ def simhash_near_duplicates(
 
     Physical shape (round 6): each band bucket carries its members'
     (doc_id, simhash) pairs through ONE groupBy, and pairs are
-    enumerated + Hamming-verified INSIDE the bucket's task — the
+    enumerated + Hamming-verified INSIDE the bucket's unit tasks — the
     candidate pair table never touches an exchange, nothing is
     collected to the driver, and the fingerprint table is consumed by
     exactly one stage (the earlier shape collected + broadcast all
     fingerprints — two extra driver actions — and before that shuffled
     an O(pairs) candidate table through two joins). Buckets above
     ``max_block`` are excluded like the other LSH tiers (a degenerate
-    all-same-band corpus would otherwise emit B^2 pairs); per-task
-    memory is bounded by max_block^2/2 enumerated pairs per bucket.
+    all-same-band corpus would otherwise emit B^2 pairs); a verify call
+    holds at most about ``FLUSH_PAIRS`` + ``UNIT_ROWS * max_block``
+    enumerated pairs.
     """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     if max_hamming > bands - 1:
@@ -1078,17 +1102,10 @@ def simhash_near_duplicates(
         r["band_key"]
         for r in buckets.where(F.col("bs") > max_block).select("band_key").collect()
     )
-    units = (
-        buckets.where((F.col("bs") >= 2) & (F.col("bs") <= max_block))
-        .select(
-            "band_key",
-            F.col("mem.doc_id").alias("ids"),
-            F.col("mem.simhash").alias("shs"),
-        )
-        # round-robin spread: unit rows are tiny but fan out to
-        # O(bs^2) pairs — AQE's byte-based coalescing would serialize
-        # the verify (same rationale as the jaccard units)
-        .repartition(df.sparkSession.sparkContext.defaultParallelism)
+    units = _bucket_units(
+        buckets,
+        ["band_key", F.col("mem.doc_id").alias("ids"), F.col("mem.simhash").alias("shs")],
+        max_block,
     )
     out_schema = T.StructType(
         [
@@ -1097,87 +1114,51 @@ def simhash_near_duplicates(
             T.StructField("hamming", T.IntegerType(), False),
         ]
     )
-    flush_pairs = 1 << 20
-
-    dropped_arr_host = dropped_keys
     band_mask = (1 << rpb) - 1
+    width = max(rpb, 1)  # band b's keys are b << width plus its bits
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dropped_arr = np.asarray(dropped_arr_host, dtype=np.int64)
+    def setup():
+        import numpy as np
+        import pandas as pd
 
-        def verify(da, db, fa, fb, bb) -> "pd.DataFrame":
+        keys = np.asarray(dropped_keys, dtype=np.int64)
+        cut = np.searchsorted(keys, np.arange(bands + 1, dtype=np.int64) << width)
+        # each band's dropped bucket values, sorted
+        dropped = [keys[cut[b] : cut[b + 1]] - (b << width) for b in range(bands)]
+
+        def verify(da, db, fa, fb, bkeys) -> "pd.DataFrame":
             # first-surviving-band rule: drop the pair here if an
             # EARLIER band agrees and that band's bucket survived the
             # cap (the pair is emitted there instead)
+            bb = bkeys >> width
             keep_first = np.ones(len(da), dtype=bool)
             for b2 in range(bands - 1):
                 earlier = bb > b2
                 if not earlier.any():
                     continue
                 va = (fa >> (b2 * rpb)) & band_mask
-                agree = earlier & (
-                    va == ((fb >> (b2 * rpb)) & band_mask)
-                )
-                if dropped_arr.size:
-                    agree &= ~np.isin(b2 * (1 << rpb) + va, dropped_arr)
+                agree = earlier & (va == ((fb >> (b2 * rpb)) & band_mask))
+                d = dropped[b2]
+                if d.size:
+                    agree &= d[np.minimum(np.searchsorted(d, va), d.size - 1)] != va
                 keep_first &= ~agree
             da, db = da[keep_first], db[keep_first]
-            fa, fb = fa[keep_first], fb[keep_first]
-            x = (fa ^ fb).astype(np.uint64)[:, None]
+            x = (fa[keep_first] ^ fb[keep_first]).astype(np.uint64)[:, None]
             ham = _swar_popcount_rows(x).astype("int32")
             keep = ham <= max_hamming
             return pd.DataFrame(
                 {"doc_a": da[keep], "doc_b": db[keep], "hamming": ham[keep]}
             )
 
-        for pdf_b in batches:
-            acc_a, acc_b, acc_fa, acc_fb, acc_bb, acc_n = [], [], [], [], [], 0
-            for bkey, ids_l, sh_l in zip(
-                pdf_b["band_key"], pdf_b["ids"], pdf_b["shs"]
-            ):
-                ids_arr = np.asarray(ids_l)
-                fp_arr = np.asarray(sh_l, dtype=np.int64)
-                m = len(ids_arr)
-                if m < 2:
-                    continue
-                i_idx = np.arange(0, m - 1, dtype=np.int64)
-                reps = m - 1 - i_idx
-                ia = np.repeat(i_idx, reps)
-                cum = np.cumsum(reps) - reps
-                ib = (
-                    np.arange(reps.sum(), dtype=np.int64)
-                    - np.repeat(cum, reps)
-                    + np.repeat(i_idx + 1, reps)
-                )
-                acc_a.append(ids_arr[ia])
-                acc_b.append(ids_arr[ib])
-                acc_fa.append(fp_arr[ia])
-                acc_fb.append(fp_arr[ib])
-                acc_bb.append(
-                    np.full(len(ia), int(bkey) >> rpb, dtype=np.int64)
-                )
-                acc_n += len(ia)
-                if acc_n >= flush_pairs:
-                    yield verify(
-                        np.concatenate(acc_a), np.concatenate(acc_b),
-                        np.concatenate(acc_fa), np.concatenate(acc_fb),
-                        np.concatenate(acc_bb),
-                    )
-                    acc_a, acc_b, acc_fa, acc_fb, acc_bb, acc_n = (
-                        [], [], [], [], [], 0
-                    )
-            if acc_a:
-                yield verify(
-                    np.concatenate(acc_a), np.concatenate(acc_b),
-                    np.concatenate(acc_fa), np.concatenate(acc_fb),
-                    np.concatenate(acc_bb),
-                )
+        return verify, None
 
     # distinct retained for exact parity on degenerate inputs with
     # repeated doc_ids (several positions can form the same id pair) —
     # but the first-surviving-band rule already emits each position
     # pair once, so its input is ~bands-times smaller than before
-    return units.mapInPandas(run, out_schema).distinct()
+    return _map_unit_pairs(
+        units, out_schema, setup, ("ids", "shs"), ("band_key",)
+    ).distinct()
 
 
 def ngram_jaccard_pairs(
@@ -1237,8 +1218,6 @@ def embedding_near_duplicates(
     id_col: str,
     vec_col: str,
     threshold: float = DEFAULT_COSINE_THRESHOLD,
-    max_broadcast_rows: int = 2_000_000,
-    max_broadcast_bytes: int = 1 << 31,
 ) -> DataFrame:
     """Exact cosine near-dup pairs (doc_a, doc_b) with
     cosine >= threshold.
@@ -1257,8 +1236,8 @@ def embedding_near_duplicates(
 
     Driver discipline (round 6 — the count-guard-then-collect shape
     the round-5 CollectLimit finding mandates): the cap is
-    **dim-aware** — the row budget is ``min(max_broadcast_rows,
-    max_broadcast_bytes / (dim * 8))`` — and the base table is lazily
+    **dim-aware** — the row budget is ``min(EMB_MAX_BROADCAST_ROWS,
+    EMB_MAX_BROADCAST_BYTES / (dim * 8))`` — and the base table is lazily
     localCheckpointed, then ONE full aggregation returns (n, dim)
     exactly; only when ``n <= cap`` does the Arrow ``toPandas()``
     fetch run, so the driver never buffers more than the guarded byte
@@ -1298,7 +1277,7 @@ def embedding_near_duplicates(
         return df.sparkSession.createDataFrame([], schema_empty)
     dim = int(head["d"])
     n = int(head["n"])
-    cap = min(max_broadcast_rows, max_broadcast_bytes // (dim * 8))
+    cap = min(EMB_MAX_BROADCAST_ROWS, EMB_MAX_BROADCAST_BYTES // (dim * 8))
     if n > cap:
         raise ValueError(
             f"embedding_near_duplicates exact tier needs the vector set "

@@ -18,9 +18,11 @@ pretraining pipeline runs between dedup and packing:
 - **ngram_contamination**: benchmark-contamination detection (the
   GPT-3 appendix-C / C4 style n-gram collision check): a document is
   flagged when it shares >= 1 word n-gram with the evaluation set.
-  The benchmark n-gram table is tiny and BROADCAST; the corpus side is
-  a map-side explode + broadcast semi-join + per-doc count — the
-  corpus never shuffles.
+  The eval set's distinct n-grams are count-guarded, collected and
+  BROADCAST; one Arrow pass matches each document's token windows
+  against them. Above ``MAX_BENCH_GRAMS`` eval grams the fallback is a
+  map-side explode + broadcast semi-join + per-doc count. The corpus
+  never shuffles in either.
 
 All outputs are integers/strings (scaled x1000 floors), so every
 operator carries an exact DuckDB oracle in entry_queries.py.
@@ -36,6 +38,9 @@ from legal_knowledge_graph_spark.functions.text import lower_tokens
 #: ASCII-only PII patterns, identical semantics in Java regex and RE2.
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_RE = r"\b[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}\b"
+#: distinct eval n-grams ngram_contamination collects and broadcasts;
+#: above it the semi-join fallback runs
+MAX_BENCH_GRAMS = 2_000_000
 
 #: max multiplicity of any element == longest equal-adjacent run in
 #: the SORTED array: one codegen'd fold, no (doc, ngram) shuffle.
@@ -143,7 +148,6 @@ def ngram_contamination(
     text_col: str,
     bench_text_col: str,
     n: int = 13,
-    max_bench_grams: int = 2_000_000,
 ) -> DataFrame:
     """(doc_id, n_contaminated_ngrams) for documents sharing >= 1 word
     ``n``-gram with the benchmark texts — the decontamination join run
@@ -158,23 +162,28 @@ def ngram_contamination(
     and shuffled the exploded matches. The corpus never shuffles in
     either shape; per-row match counts reduce through one tiny
     aggregation over matched rows only. An eval set above
-    ``max_bench_grams`` falls back to the broadcast semi-join plan.
+    ``MAX_BENCH_GRAMS`` falls back to the broadcast semi-join plan.
     """
     from legal_knowledge_graph_spark.functions.partitioning import ensure_parallel
 
     bench_staged = bench.select(lower_tokens(F.col(bench_text_col)).alias("_t")).withColumn(
         "_g", _word_ngrams("_t", n)
     )
-    bench_grams_df = bench_staged.select(F.explode("_g").alias("gram")).distinct()
+    bench_grams_df = (
+        bench_staged.select(F.explode("_g").alias("gram"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
 
     doc_toks = ensure_parallel(
         docs.select(F.col(id_col).alias("doc_id"), lower_tokens(F.col(text_col)).alias("_t"))
     )
 
-    # count-guard-then-collect: the eval set is tiny by contract, but
-    # the guard keeps the driver byte-bounded before anything moves
-    bench_rows = bench_grams_df.limit(max_bench_grams + 1).collect()
-    if len(bench_rows) > max_bench_grams:
+    # count-guard-then-collect over the checkpointed distinct: the
+    # eval set is tiny by contract, but the driver stays byte-bounded
+    # before anything moves (a limit(cap + 1).collect() probe ships up
+    # to cap + 1 rows PER PARTITION when the set overflows)
+    if bench_grams_df.count() > MAX_BENCH_GRAMS:
         # the broadcast-hash semi-join fallback (the prior shape)
         doc_staged = doc_toks.withColumn("_g", _word_ngrams("_t", n))
         doc_grams = doc_staged.select(
@@ -188,7 +197,7 @@ def ngram_contamination(
 
     # tokens contain no whitespace and grams join them with a single
     # space, so gram-string equality == token-sequence equality
-    bench_tok = [r["gram"].split(" ") for r in bench_rows]
+    bench_tok = [r["gram"].split(" ") for r in bench_grams_df.collect()]
 
     from typing import Iterator
 

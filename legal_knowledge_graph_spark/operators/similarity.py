@@ -4,10 +4,12 @@ Two paths:
 - **brute-force top-k** (the exact baseline): native cosine expression
   + ``orderBy().limit(k)`` -> TakeOrderedAndProject. Exact, one scan,
   no index; right up to ~10^8 vectors per query batch on a cluster.
-- **hyperplane-LSH bucketed** (the scale path): sign-random-projection
-  bucket per vector (deterministic md5-derived hyperplanes), queries
-  probe only their bucket (+ optional multi-probe neighbors). Recall
-  < 1 by construction; the exact path is the correctness oracle.
+- **hyperplane-LSH bucketed** (the scale path): one ``lsh_top_k``.
+  Each of ``n_tables`` independent tables puts every vector in a
+  sign-random-projection bucket (deterministic hyperplanes from the
+  FNV token hash); a query scans the vectors that share, in any table,
+  its bucket or one within ``multi_probe`` bit-flips. Recall < 1 by
+  construction; the exact path is the correctness oracle.
 
 Both are pure DataFrame ops. Batched many-query search is a
 broadcast join of the (small) query set against the vector table —
@@ -170,49 +172,6 @@ def lsh_bucket_tables(
     return out.drop("_lshb")
 
 
-def lsh_bucket(
-    vectors: DataFrame, vec_col: str, dim: int, n_planes: int = 8, table: int = 0
-) -> DataFrame:
-    """Add a sign-random-projection ``lsh_bucket`` int column (named
-    ``lsh_bucket_{table}`` for table > 0): bit p = sign(v .
-    hyperplane_p). 2^n_planes buckets; cosine-similar vectors collide
-    with high probability. Single-table wrapper over
-    :func:`lsh_bucket_tables`."""
-    return lsh_bucket_tables(vectors, vec_col, dim, n_planes, (table,))
-
-
-def lsh_top_k(
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_vector: list[float],
-    dim: int,
-    k: int = 10,
-    n_planes: int = 8,
-    multi_probe: int = 2,
-) -> DataFrame:
-    """Approximate top-k with **multi-probe**: scan the query's LSH
-    bucket plus every bucket within Hamming distance ``multi_probe``
-    of it (the standard multi-probe LSH recipe — a vector whose sign
-    differs on one near-zero projection lands one bit-flip away). The
-    default ``multi_probe=2`` scans ``1 + n_planes + C(n_planes, 2)``
-    of the ``2^n_planes`` buckets — 37/256 at 8 planes, still a ~7x
-    smaller scan than brute force — chosen as the retrieval-backbone
-    operating point (recall 0.39 vs 0.23 at probe 1 on the worst-case
-    near-uniform bench vectors; real clustered embeddings sit much
-    higher — see BASELINE.md). At scale the bucketed table is written
-    partitioned by ``lsh_bucket`` so the probe set prunes the scan."""
-    bucketed = lsh_bucket(vectors, vec_col, dim, n_planes)
-    probes = _probe_set(query_vector, dim, n_planes, multi_probe)
-    return brute_force_top_k(
-        bucketed.where(F.col("lsh_bucket").isin(sorted(probes))),
-        id_col,
-        vec_col,
-        query_vector,
-        k,
-    )
-
-
 def _probe_set(
     query_vector: list[float],
     dim: int,
@@ -241,7 +200,7 @@ def _probe_set(
     return probes
 
 
-def lsh_top_k_multi(
+def lsh_top_k(
     vectors: DataFrame,
     id_col: str,
     vec_col: str,
@@ -249,31 +208,28 @@ def lsh_top_k_multi(
     dim: int,
     k: int = 10,
     n_planes: int = 8,
-    multi_probe: int = 1,
-    n_tables: int = 8,
+    multi_probe: int = 2,
+    n_tables: int = 1,
 ) -> DataFrame:
-    """Approximate top-k via **multi-table LSH**: ``n_tables``
-    INDEPENDENT hyperplane families, each probed at
-    Hamming-``multi_probe``; a vector is scanned if ANY table places it
-    in that table's probe set. Independent tables attack the recall
-    ceiling single-table multi-probe hits (a neighbor whose signs
-    differ from the query on 3+ planes of ONE family is likely within 1
-    flip under ANOTHER family). Measured on the worst-case near-uniform
-    bench vectors (BASELINE.md round-5 ANN table): the 8-table default
-    gives mean recall@10 **0.66 at 27% scan** (sf0.001, 500 vectors)
-    vs 0.40 for single-table probe-2 at 14.5% scan — pinned by
-    tests/test_traindata_ops.py (recall >= 0.6, scan <= 0.30). The
-    scan fraction shrinks with corpus size (buckets here hold ~2
-    vectors; at 1M+ rows each probe set is a vanishing fraction).
+    """Approximate top-k by hyperplane LSH over ``n_tables``
+    INDEPENDENT hyperplane families (table 0 keeps the original
+    planes). Each table is probed at the query's bucket plus every
+    bucket within Hamming distance ``multi_probe`` of it (a vector
+    whose sign differs on one near-zero projection lands one bit-flip
+    away), and a vector is scanned if ANY table places it in its probe
+    set. One table at distance r scans sum_{i<=r} C(n_planes, i) of the
+    2^n_planes buckets (37/256 at 8 planes, r=2); more tables lift the
+    recall ceiling of one family (a neighbor 3+ flips away under one
+    family is likely within 1 flip under another) at L x the index
+    storage. Recall < 1 by construction: callers pick and note their
+    operating point. ``n_planes=0``, or ``multi_probe=n_planes``,
+    probes every bucket and equals brute force.
 
-    Physical shape: locally this is ONE scan with an OR-of-IN
-    predicate; all tables' buckets come from a single Arrow-batched
-    matmul pass (lsh_bucket_tables — no shuffle, one vectorized UDF
-    stage; the previous 64 stacked Catalyst folds cost ~4 s of
-    constant codegen per query). At cluster scale each table is its
-    own ``partitionBy(lsh_bucket_t)`` index layout (the standard
-    L-tables space trade: L x index storage, queries touch only
-    probed partitions of each table).
+    Physical shape: ONE scan with an OR-of-IN predicate; all tables'
+    buckets come from a single Arrow-batched matmul pass
+    (:func:`lsh_bucket_tables`). At cluster scale each table is its
+    own ``partitionBy(lsh_bucket_t)`` layout, so the probe sets prune
+    the scan.
     """
     bucketed = lsh_bucket_tables(
         vectors, vec_col, dim, n_planes, tuple(range(n_tables))
@@ -314,7 +270,7 @@ def embedding_near_dup_lsh(
     to the exact all-pairs tier (the oracle-gated reduction).
     """
     rpb = n_planes // bands if bands else 0
-    b = lsh_bucket(vectors, vec_col, dim, n_planes).select(
+    b = lsh_bucket_tables(vectors, vec_col, dim, n_planes).select(
         F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v"), "lsh_bucket"
     )
     cand = _banded_pairs(
@@ -334,13 +290,15 @@ def embedding_near_dup_lsh(
 # ------------------------------------------------------------------ IVF
 
 
+#: IVF training: Lloyd's iterations, and the driver sample's row and
+#: byte caps
+IVF_ITERATIONS = 4
+IVF_SAMPLE_LIMIT = 100_000
+IVF_MAX_SAMPLE_BYTES = 1 << 28
+
+
 def train_ivf_centroids(
-    vectors: DataFrame,
-    vec_col: str,
-    k: int = 64,
-    iterations: int = 4,
-    sample_limit: int = 100_000,
-    max_sample_bytes: int = 1 << 28,
+    vectors: DataFrame, vec_col: str, k: int = 64
 ) -> list[list[float]]:
     """Deterministic mini-Lloyd's on a hash-ordered sample.
 
@@ -351,10 +309,10 @@ def train_ivf_centroids(
     distributed). Returns unit-norm centroids.
 
     The sample cap is **dim-aware**: the row budget is
-    ``min(sample_limit, max_sample_bytes / (dim * 8))`` so a 3072-dim
-    corpus trains on ~10k vectors under the 256 MB default instead of
-    pulling 2.4 GB through the driver — Lloyd's needs ~100x k points,
-    not 100k unconditionally.
+    ``min(IVF_SAMPLE_LIMIT, IVF_MAX_SAMPLE_BYTES / (dim * 8))`` so a
+    3072-dim corpus trains on ~10k vectors under the 256 MB default
+    instead of pulling 2.4 GB through the driver — Lloyd's needs ~100x
+    k points, not 100k unconditionally.
 
     Round 6 (the count-guard discipline's sibling): the sample fetch is
     byte-bounded BEFORE anything reaches the driver.
@@ -393,10 +351,10 @@ def train_ivf_centroids(
             )
         return []
     dim = int(head["d"])
-    cap = max(min(sample_limit, max_sample_bytes // (dim * 8)), k)
+    cap = max(min(IVF_SAMPLE_LIMIT, IVF_MAX_SAMPLE_BYTES // (dim * 8)), k)
     keyed = vectors.select(F.md5(F.col(vec_col).cast("string")).alias("_k"), vec_col)
     n_parts = max(keyed.rdd.getNumPartitions(), 1)
-    if n_parts * cap * dim * 8 <= max_sample_bytes:
+    if n_parts * cap * dim * 8 <= IVF_MAX_SAMPLE_BYTES:
         rows = keyed.orderBy("_k").limit(cap).collect()
         X = np.array([r[vec_col] for r in rows], dtype="float64")
     else:
@@ -425,7 +383,7 @@ def train_ivf_centroids(
     X = X / norms
     k = min(k, len(X))
     C = X[:k].copy()
-    for _ in range(iterations):
+    for _ in range(IVF_ITERATIONS):
         assign = np.argmax(X @ C.T, axis=1)
         for c in range(k):
             members = X[assign == c]

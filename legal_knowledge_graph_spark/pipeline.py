@@ -70,16 +70,13 @@ def run_pipeline(
     pages: DataFrame,
     workdir: str,
     embed_dim: int = 64,
-    n_partitions: int | None = None,
-    force: bool = False,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full construction DAG; returns the committed
     stage tables. A stage whose checkpoint is already committed is
     read, not recomputed (reference S4/S5 cache semantics,
     table_of_contents_extractor.py:55-65)."""
     cat = StageCatalog(spark, workdir)
-    if n_partitions is None:
-        n_partitions = spark.sparkContext.defaultParallelism
+    n_partitions = spark.sparkContext.defaultParallelism
 
     # Stage boundary 1: extraction. Re-bucket by url hash so document
     # work (align kernel = CPU-heavy per doc) spreads uniformly even if
@@ -87,28 +84,21 @@ def run_pipeline(
     extracted = cat.stage(
         "extracted",
         lambda: extract_text(pages).repartition(n_partitions, F.col("url")),
-        force=force,
     )
 
-    mentions = cat.stage("mentions", lambda: detect_mentions(extracted), force=force)
-    raw_triples = cat.stage("raw_triples", lambda: extract_triples(extracted), force=force)
+    mentions = cat.stage("mentions", lambda: detect_mentions(extracted))
+    raw_triples = cat.stage("raw_triples", lambda: extract_triples(extracted))
 
     # Stage boundary 2: linking (its own shuffles internally: distinct
     # surfaces -> LSH bands -> CC). Output is small (distinct surfaces).
-    canonical_map = cat.stage(
-        "canonical_map", lambda: link_entities(mentions), force=force
-    )
+    canonical_map = cat.stage("canonical_map", lambda: link_entities(mentions))
 
     triples = cat.stage(
-        "triples",
-        lambda: canonicalize_triples(raw_triples, canonical_map),
-        force=force,
+        "triples", lambda: canonicalize_triples(raw_triples, canonical_map)
     )
 
-    chunks = cat.stage("chunks", lambda: chunk_documents(extracted), force=force)
-    chunks_sum = cat.stage(
-        "chunks_summarized", lambda: summarize_tree(chunks), force=force
-    )
+    chunks = cat.stage("chunks", lambda: chunk_documents(extracted))
+    chunks_sum = cat.stage("chunks_summarized", lambda: summarize_tree(chunks))
 
     # absolute_chunks joins the chunk tree back to the extracted pages
     # (span re-basing) and feeds BOTH the nodes and edges stages; the
@@ -116,7 +106,7 @@ def run_pipeline(
     # consumer. Under AQE even a lazy localCheckpoint runs its job when
     # created, so it is built only when one of its consumers will be
     # computed: a reopen of a committed workdir runs no Spark job.
-    if force or not (cat.committed("nodes") and cat.committed("edges")):
+    if not (cat.committed("nodes") and cat.committed("edges")):
         chunks_abs = absolute_chunks(chunks_sum, extracted).localCheckpoint(eager=False)
 
     def _nodes() -> DataFrame:
@@ -143,7 +133,7 @@ def run_pipeline(
             attach_vectors(nodes, dim=embed_dim), "bucket", N_BUCKETS
         )
 
-    nodes = cat.stage("nodes", _nodes, partition_col="bucket", force=force)
+    nodes = cat.stage("nodes", _nodes, partition_col="bucket")
 
     def _edges() -> DataFrame:
         # same balanced-write rationale as the nodes write above
@@ -153,7 +143,7 @@ def run_pipeline(
             N_BUCKETS,
         )
 
-    edges = cat.stage("edges", _edges, partition_col="bucket", force=force)
+    edges = cat.stage("edges", _edges, partition_col="bucket")
 
     # one batched lineage append for every stage committed this run
     cat.flush_lineage()

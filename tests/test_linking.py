@@ -15,6 +15,7 @@ from legal_knowledge_graph_spark.datagen import (
     generate_pages,
     page_record,
 )
+from legal_knowledge_graph_spark.operators import cc
 from legal_knowledge_graph_spark.operators.cc import connected_components
 from legal_knowledge_graph_spark.operators.extract import extract_text
 from legal_knowledge_graph_spark.operators.linking import link_entities
@@ -63,9 +64,9 @@ def test_connected_components_vs_union_find(spark):
         assert got[n] == exp[n], n
 
 
-def test_cc_driver_fast_path_equals_distributed(spark):
-    """The bounded driver union-find fast path (driver_cap) and the
-    large-star/small-star loop (driver_cap=0 forces it) must produce
+def test_cc_driver_fast_path_equals_distributed(spark, monkeypatch):
+    """The bounded driver union-find fast path (DRIVER_CAP) and the
+    large-star/small-star loop (DRIVER_CAP=0 forces it) must produce
     identical assignments — including self-loop-only vertices, which
     only the distributed nodes table sees."""
     import random
@@ -77,27 +78,27 @@ def test_cc_driver_fast_path_equals_distributed(spark):
     fast = {
         r["node"]: r["component"] for r in connected_components(df).collect()
     }
+    monkeypatch.setattr(cc, "DRIVER_CAP", 0)
     dist = {
-        r["node"]: r["component"]
-        for r in connected_components(df, driver_cap=0).collect()
+        r["node"]: r["component"] for r in connected_components(df).collect()
     }
     assert fast == dist
     for n in range(500, 505):
         assert fast[n] == n
 
 
-def test_cc_raises_when_loop_does_not_converge(spark):
+def test_cc_raises_when_loop_does_not_converge(spark, monkeypatch):
     """A 64-node path needs more large-star/small-star rounds than
-    max_iter=2 allows: the loop must raise rather than return its
+    MAX_ITER=2 allows: the loop must raise rather than return its
     unsettled state (which split the path into 60 components); with
-    the default max_iter it converges to the one true component."""
+    the default MAX_ITER it converges to the one true component."""
     path = spark.createDataFrame([(i, i + 1) for i in range(63)], ["src", "dst"])
-    with pytest.raises(RuntimeError, match="max_iter=2"):
-        connected_components(path, max_iter=2, driver_cap=0)
-    comps = {
-        r["component"]
-        for r in connected_components(path, driver_cap=0).collect()
-    }
+    monkeypatch.setattr(cc, "DRIVER_CAP", 0)
+    with monkeypatch.context() as m:
+        m.setattr(cc, "MAX_ITER", 2)
+        with pytest.raises(RuntimeError, match="MAX_ITER=2"):
+            connected_components(path)
+    comps = {r["component"] for r in connected_components(path).collect()}
     assert comps == {0}
 
 

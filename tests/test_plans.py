@@ -119,7 +119,7 @@ def test_ann_bucket_layouts_prune_partitions(spark, sf_dir, tmp_path):
     filters in the scan — only the probed buckets are read."""
     from legal_knowledge_graph_spark.operators.similarity import (
         ivf_assign,
-        lsh_bucket,
+        lsh_bucket_tables,
         train_ivf_centroids,
     )
 
@@ -129,7 +129,7 @@ def test_ann_bucket_layouts_prune_partitions(spark, sf_dir, tmp_path):
     dim = len(embs.first()["embedding"])
 
     lsh_path = str(tmp_path / "lsh_idx")
-    lsh_bucket(embs, "embedding", dim, n_planes=4).write.partitionBy(
+    lsh_bucket_tables(embs, "embedding", dim, n_planes=4).write.partitionBy(
         "lsh_bucket"
     ).parquet(lsh_path)
     probe = spark.read.parquet(lsh_path).where(F.col("lsh_bucket").isin([0, 1, 2]))

@@ -96,9 +96,11 @@ def test_ngram_contamination_plan_never_shuffles_corpus(spark):
     assert "Join" not in plan and "Generate" not in plan  # no join, no explode
 
 
-def test_ngram_contamination_oversized_bench_falls_back_to_join(spark):
-    """Above max_bench_grams the broadcast semi-join plan (the scale
+def test_ngram_contamination_oversized_bench_falls_back_to_join(spark, monkeypatch):
+    """Above MAX_BENCH_GRAMS the broadcast semi-join plan (the scale
     fallback) must be used and produce the same rows."""
+    from legal_knowledge_graph_spark.operators import quality
+
     docs = spark.createDataFrame(
         [(0, "a b c d e"), (1, "x y z")], "doc_id long, text string"
     )
@@ -107,9 +109,8 @@ def test_ngram_contamination_oversized_bench_falls_back_to_join(spark):
         tuple(r)
         for r in ngram_contamination(docs, bench, "doc_id", "text", "q", n=3).collect()
     )
-    slow_df = ngram_contamination(
-        docs, bench, "doc_id", "text", "q", n=3, max_bench_grams=1
-    )
+    monkeypatch.setattr(quality, "MAX_BENCH_GRAMS", 1)
+    slow_df = ngram_contamination(docs, bench, "doc_id", "text", "q", n=3)
     plan = slow_df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     assert sorted(tuple(r) for r in slow_df.collect()) == fast

@@ -84,19 +84,19 @@ def test_minhash_near_dup_finds_planted_pair(spark, docs):
         assert r["inter_size"] >= 0.7 * r["union_size"]
 
 
-def test_embedding_near_dup_cap_is_dim_aware(spark, embs):
+def test_embedding_near_dup_cap_is_dim_aware(spark, embs, monkeypatch):
     """The broadcast cap scales with rows x dim: a byte budget one row
     short raises; the exact budget passes."""
+    from legal_knowledge_graph_spark.operators import dedup
+
     sub = embs.withColumn("vid", F.col("vec_id").cast("long")).where("vid < 50")
     n = sub.count()
     dim = len(sub.first()["embedding"])
+    monkeypatch.setattr(dedup, "EMB_MAX_BROADCAST_BYTES", (n - 1) * dim * 8)
     with pytest.raises(ValueError):
-        embedding_near_duplicates(
-            sub, "vid", "embedding", max_broadcast_bytes=(n - 1) * dim * 8
-        )
-    ok = embedding_near_duplicates(
-        sub, "vid", "embedding", threshold=0.999999, max_broadcast_bytes=n * dim * 8
-    )
+        embedding_near_duplicates(sub, "vid", "embedding")
+    monkeypatch.setattr(dedup, "EMB_MAX_BROADCAST_BYTES", n * dim * 8)
+    ok = embedding_near_duplicates(sub, "vid", "embedding", threshold=0.999999)
     assert ok.count() >= 0
 
 
@@ -243,15 +243,18 @@ def test_emb_lsh_near_dup_scale_path(spark, embs):
     assert capped.count() == 0
 
 
-def test_ivf_training_sample_cap_is_dim_aware(spark, embs):
+def test_ivf_training_sample_cap_is_dim_aware(spark, embs, monkeypatch):
     """IVF centroid training bounds its driver sample by bytes
     (rows x dim x 8), never below k, and handles empty input."""
+    from legal_knowledge_graph_spark.operators import similarity
     from legal_knowledge_graph_spark.operators.similarity import train_ivf_centroids
 
     dim = len(embs.first()["embedding"])
-    c = train_ivf_centroids(embs, "embedding", k=8, max_sample_bytes=20 * dim * 8)
+    monkeypatch.setattr(similarity, "IVF_MAX_SAMPLE_BYTES", 20 * dim * 8)
+    c = train_ivf_centroids(embs, "embedding", k=8)
     assert len(c) == 8
-    c2 = train_ivf_centroids(embs, "embedding", k=8, max_sample_bytes=1)
+    monkeypatch.setattr(similarity, "IVF_MAX_SAMPLE_BYTES", 1)
+    c2 = train_ivf_centroids(embs, "embedding", k=8)
     assert len(c2) == 8  # floor at k
     assert train_ivf_centroids(embs.where("false"), "embedding", k=8) == []
 
@@ -338,7 +341,9 @@ def test_embedding_near_dup_and_lsh_vs_exact(spark, embs):
     q = [float(x) for x in embs.first()["embedding"]]
     exact = brute_force_top_k(sub, "vid", "embedding", q, k=5).collect()
     assert exact[0]["id"] == 0 and exact[0]["score"] == pytest.approx(1.0, abs=1e-6)
-    approx = lsh_top_k(sub, "vid", "embedding", q, dim=dim, k=5).collect()
+    approx = lsh_top_k(
+        sub, "vid", "embedding", q, dim=dim, k=5, multi_probe=2, n_tables=1
+    ).collect()
     # the query's own vector is always in its own bucket -> rank 1
     assert approx[0]["id"] == 0
 
@@ -486,7 +491,12 @@ def test_ivf_ann_recall_beats_hyperplane_lsh(spark, embs):
         for r in ivf_top_k(indexed, "vid", "embedding", q, cents, k=10, n_probe=4).collect()
     }
     recall_ivf = len(exact & approx) / 10
-    lsh = {r["id"] for r in lsh_top_k(sub, "vid", "embedding", q, dim=dim, k=10).collect()}
+    lsh = {
+        r["id"]
+        for r in lsh_top_k(
+            sub, "vid", "embedding", q, dim=dim, k=10, multi_probe=2, n_tables=1
+        ).collect()
+    }
     recall_lsh = len(exact & lsh) / 10
     assert recall_ivf >= 0.5, f"ivf recall {recall_ivf}"
     assert recall_ivf > recall_lsh, (recall_ivf, recall_lsh)
@@ -576,9 +586,8 @@ def test_multi_table_lsh_recall_and_exact_reduction(spark, embs):
     of L independent tables), with both pinned for BASELINE.md."""
     from legal_knowledge_graph_spark.operators.similarity import (
         brute_force_top_k,
-        lsh_bucket,
+        lsh_bucket_tables,
         lsh_top_k,
-        lsh_top_k_multi,
         _probe_set,
     )
 
@@ -593,7 +602,7 @@ def test_multi_table_lsh_recall_and_exact_reduction(spark, embs):
     ]
     full = [
         (r["id"], r["rank"])
-        for r in lsh_top_k_multi(
+        for r in lsh_top_k(
             sub, "vid", "embedding", q, dim, k=10, n_planes=4, multi_probe=4, n_tables=2
         ).collect()
     ]
@@ -608,19 +617,24 @@ def test_multi_table_lsh_recall_and_exact_reduction(spark, embs):
         truth = {r["id"] for r in brute_force_top_k(sub, "vid", "embedding", qv, k=10).collect()}
         multi = {
             r["id"]
-            for r in lsh_top_k_multi(sub, "vid", "embedding", qv, dim, k=10).collect()
+            for r in lsh_top_k(
+                sub, "vid", "embedding", qv, dim, k=10, multi_probe=1, n_tables=8
+            ).collect()
         }
         single = {
-            r["id"] for r in lsh_top_k(sub, "vid", "embedding", qv, dim=dim, k=10).collect()
+            r["id"]
+            for r in lsh_top_k(
+                sub, "vid", "embedding", qv, dim, k=10, multi_probe=2, n_tables=1
+            ).collect()
         }
         rec_multi.append(len(truth & multi) / 10)
         rec_single.append(len(truth & single) / 10)
         # scan fraction of the default multi-table operating point
-        # (8 tables x probe-1 — keep in sync with lsh_top_k_multi defaults)
+        # (8 tables x probe-1, as in the multi-table call above)
         b = sub
         cond = None
         for t in range(8):
-            b = lsh_bucket(b, "embedding", dim, 8, table=t)
+            b = lsh_bucket_tables(b, "embedding", dim, 8, (t,))
             col = "lsh_bucket" if t == 0 else f"lsh_bucket_{t}"
             c = F.col(col).isin(sorted(_probe_set(qv, dim, 8, 1, table=t)))
             cond = c if cond is None else (cond | c)
@@ -637,13 +651,12 @@ def test_multi_table_lsh_recall_and_exact_reduction(spark, embs):
 def test_lsh_bucket_tables_matches_numpy_reference(spark, embs):
     """The single-pass Arrow bucketing must equal a from-scratch numpy
     recompute of sign(v . hyperplane_{t,p}) bit-packing for every
-    table, and the single-table wrapper must agree with the multi-table
-    pass (guards the hyperplane family derivation and bit order)."""
+    table, and a single-table pass must agree with the multi-table pass
+    (guards the hyperplane family derivation and bit order)."""
     import numpy as np
 
     from legal_knowledge_graph_spark.operators.similarity import (
         _hyperplane,
-        lsh_bucket,
         lsh_bucket_tables,
     )
 
@@ -669,7 +682,7 @@ def test_lsh_bucket_tables_matches_numpy_reference(spark, embs):
 
     single = {
         r["vid"]: r["lsh_bucket_3"]
-        for r in lsh_bucket(sub, "embedding", dim, n_planes, table=3).collect()
+        for r in lsh_bucket_tables(sub, "embedding", dim, n_planes, (3,)).collect()
     }
     assert single == {k: v[2] for k, v in got.items()}
 
@@ -732,7 +745,8 @@ def test_packed_gram_parity_with_gram_set():
 def test_jaccard_fast_path_equals_distributed(spark, docs, monkeypatch):
     """The bounded-vocab Arrow fast paths (packed grams, broadcast
     masks, block-local pair enumeration incl. the GEMM branch for big
-    blocks) must match the distributed shingle-join path row for row."""
+    blocks) must match the distributed shingle-join path row for row,
+    also when every bucket's pairs span several 3-row units."""
     from legal_knowledge_graph_spark.operators import dedup
 
     d = docs.where("doc_id < 300").select(
@@ -742,23 +756,27 @@ def test_jaccard_fast_path_equals_distributed(spark, docs, monkeypatch):
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
 
+    def ngram():
+        return rows(
+            dedup.ngram_jaccard_pairs(d, "doc_id", "text", "one_block", min_jaccard=0.5)
+        )
+
+    def minhash():
+        return rows(dedup.minhash_near_duplicates(d, "doc_id", "text", threshold=0.7))
+
     # one 300-doc block => first i-chunks enumerate >= 2^14 pairs, so
     # the GEMM branch runs for them and the pairwise branch for the tail
-    fast = rows(
-        dedup.ngram_jaccard_pairs(d, "doc_id", "text", "one_block", min_jaccard=0.5)
-    )
+    fast, fastm = ngram(), minhash()
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "UNIT_ROWS", 3)  # 3-row units: pairwise branch only
+        fast3, fastm3 = ngram(), minhash()
     monkeypatch.setattr(dedup, "_ngram_fast", lambda *a, **kw: None)
-    dist = rows(
-        dedup.ngram_jaccard_pairs(d, "doc_id", "text", "one_block", min_jaccard=0.5)
-    )
-    monkeypatch.undo()
-    assert fast == dist and len(fast) > 0
-
-    fastm = rows(dedup.minhash_near_duplicates(d, "doc_id", "text", threshold=0.7))
     monkeypatch.setattr(dedup, "_minhash_fast", lambda *a, **kw: None)
-    distm = rows(dedup.minhash_near_duplicates(d, "doc_id", "text", threshold=0.7))
-    monkeypatch.undo()
+    dist, distm = ngram(), minhash()
+    assert fast == dist and len(fast) > 0
+    assert fast3 == dist
     assert fastm == distm
+    assert fastm3 == distm
 
 
 def test_simhash_near_dup_bucket_local_equals_bruteforce(spark, docs):
@@ -804,13 +822,17 @@ def test_simhash_near_dup_bucket_local_equals_bruteforce(spark, docs):
     assert got == sorted(want) and len(got) > 0
 
 
-def test_simhash_near_dup_first_band_rule_with_dropped_buckets(spark, docs):
+def test_simhash_near_dup_first_band_rule_with_dropped_buckets(
+    spark, docs, monkeypatch
+):
     """Force buckets over the cap (max_block=3 on a corpus with planted
     near-identical clusters) so the first-surviving-band emission must
     consult the dropped-bucket set: a pair whose earliest agreeing band
     landed in a dropped bucket must still surface from its first
     SURVIVING band, and the output must equal the distinct-over-all-
-    surviving-buckets semantics recomputed from scratch."""
+    surviving-buckets semantics recomputed from scratch — also when a
+    bucket's pairs span several 1-row units."""
+    from legal_knowledge_graph_spark.operators import dedup
     import itertools
     from collections import defaultdict
 
@@ -830,12 +852,18 @@ def test_simhash_near_dup_first_band_rule_with_dropped_buckets(spark, docs):
     ]
     corpus = d.unionByName(muts[0]).unionByName(muts[1])
     max_block = 3
-    got = sorted(
-        tuple(r)
-        for r in simhash_near_duplicates(
-            corpus, "doc_id", "text", max_hamming=3, max_block=max_block
-        ).collect()
-    )
+
+    def pairs():
+        return sorted(
+            tuple(r)
+            for r in simhash_near_duplicates(
+                corpus, "doc_id", "text", max_hamming=3, max_block=max_block
+            ).collect()
+        )
+
+    got = pairs()
+    monkeypatch.setattr(dedup, "UNIT_ROWS", 1)
+    got1 = pairs()
     fps = {
         r["doc_id"]: r["simhash"]
         for r in simhash_fn(corpus, "doc_id", "text").collect()
@@ -855,3 +883,4 @@ def test_simhash_near_dup_first_band_rule_with_dropped_buckets(spark, docs):
             if h <= 3:
                 want.add((a, b, h))
     assert got == sorted(want)
+    assert got1 == sorted(want)
