@@ -930,7 +930,11 @@ from d
 def _embedding_graph(spark: SparkSession, sf_dir: str):
     """Derived graph for query-surface oracles: every embedding row is
     a Chunk node (vector = embedding), CHILD edges from 10 synthetic
-    parent nodes (parent k -> vec ids with vec_id % 10 == k)."""
+    parent nodes (parent k -> vec ids with vec_id % 10 == k). Both
+    tables carry the committed ``bucket`` column the tools prune on."""
+    from legal_knowledge_graph_spark.functions.ids import bucket
+    from legal_knowledge_graph_spark.operators.materialize import N_BUCKETS, finish_edges
+
     embs = _embs(spark, sf_dir).withColumn("vid", F.col("vec_id").cast("long"))
     nodes = embs.select(
         F.col("vid").alias("node_id"),
@@ -940,13 +944,14 @@ def _embedding_graph(spark: SparkSession, sf_dir: str):
         F.lit(None).cast("string").alias("summary"),
         F.concat(F.lit("content_"), F.col("vec_id")).alias("content"),
         F.col("embedding").alias("vector"),
+        bucket("vid", N_BUCKETS).alias("bucket"),
     )
     edges = embs.select(
         (F.lit(1000000) + F.col("vid") % 10).alias("src_id"),
         F.col("vid").alias("dst_id"),
         F.lit("CHILD").alias("type"),
     )
-    return nodes, edges
+    return nodes, finish_edges(edges)
 
 
 def q_search_children_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -980,10 +985,13 @@ from kids order by rank limit 5
 def q_search_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 — both NEXT directions, DISTINCT (search_neighbor_chunk.py
     semantics) via the real operator: nodes are orderkey 7's DISTINCT
-    linenumbers chained in sorted order; probe = the 2nd node, so the
-    expected neighbors are exactly the 1st and 3rd."""
+    linenumbers chained in sorted order, PREV the swap of NEXT as the
+    pipeline writes it; probe = the 2nd node, so the expected neighbors
+    are exactly the 1st and 3rd."""
     from pyspark.sql import Window
 
+    from legal_knowledge_graph_spark.functions.ids import bucket
+    from legal_knowledge_graph_spark.operators.materialize import N_BUCKETS, finish_edges
     from legal_knowledge_graph_spark.operators.query import search_neighbors
 
     li = (
@@ -994,7 +1002,7 @@ def q_search_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.orderBy("l_linenumber")
     ranked = li.withColumn("rk", F.row_number().over(w)).withColumn(
-        "nid", F.lit(700) + F.col("l_linenumber")
+        "nid", (F.lit(700) + F.col("l_linenumber")).cast("long")
     )
     nodes = ranked.select(
         F.col("nid").alias("node_id"),
@@ -1002,8 +1010,9 @@ def q_search_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("line_"), F.col("l_linenumber")).alias("name"),
         F.lit(None).cast("string").alias("summary"),
         F.concat(F.lit("c"), F.col("l_linenumber")).alias("content"),
+        bucket("nid", N_BUCKETS).alias("bucket"),
     )
-    edges = (
+    nxt = (
         ranked.withColumn("prev", F.lag("nid").over(w))
         .where(F.col("prev").isNotNull())
         .select(
@@ -1012,6 +1021,12 @@ def q_search_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("NEXT").alias("type"),
         )
     )
+    prv = nxt.select(
+        F.col("dst_id").alias("src_id"),
+        F.col("src_id").alias("dst_id"),
+        F.lit("PREV").alias("type"),
+    )
+    edges = finish_edges(nxt.unionByName(prv))
     probe = ranked.where("rk = 2").first()["nid"]
     return search_neighbors(nodes, edges, int(probe)).select("node_id", "name", "text")
 
@@ -1171,6 +1186,8 @@ from documents where doc_id % 5 <> 0
 def q_corpus_toc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2 (reference tools/get_corpus_toc.py:29-32): point lookup of one
     Corpus node's TOC JSON via the real operator."""
+    from legal_knowledge_graph_spark.functions.ids import bucket
+    from legal_knowledge_graph_spark.operators.materialize import N_BUCKETS
     from legal_knowledge_graph_spark.operators.query import get_corpus_toc
 
     nodes = _docs(spark, sf_dir).select(
@@ -1179,6 +1196,7 @@ def q_corpus_toc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("'{\"ARTICLE_' || (doc_id % 7) || '\":[\"s1\",\"s2\"]}'").alias(
             "toc_json"
         ),
+        bucket("doc_id", N_BUCKETS).alias("bucket"),
     )
     return get_corpus_toc(nodes, 42)
 

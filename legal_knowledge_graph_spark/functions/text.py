@@ -53,14 +53,6 @@ def split_intro_body(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def token_count(text: Column) -> Column:
-    """Whitespace token count (\\S+ runs), 0 for empty/blank strings."""
-    trimmed = F.trim(text)
-    return F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r"\s+"))
-    )
-
-
 def lower_tokens(text: Column) -> Column:
     """Lower-cased whitespace tokens; null and blank text give []."""
     t = F.trim(F.lower(F.coalesce(text, F.lit(""))))

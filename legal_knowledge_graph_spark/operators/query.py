@@ -6,13 +6,26 @@ Neo4j (src/search_knowledge_graph/tools/*); the agent loop (Q6) is an
 orchestration concern, so the engine exposes the tools directly —
 any agent can drive them. Every function takes the committed
 ``nodes``/``edges`` DataFrames and returns a DataFrame; nothing
-collects.
+collects and building a tool's DataFrame runs no Spark job.
+
+Bucket pruning contract: every id-addressed tool reads only the
+buckets its ids hash to. It needs what ``run_pipeline`` commits:
+- a ``bucket`` column on both tables (``bucket(node_id)`` on nodes,
+  ``bucket(src_id)`` on edges, materialize.N_BUCKETS buckets) over
+  bigint ids;
+- PREV edges written as the exact swap of NEXT, so a chunk's
+  neighbours are all in its own edges bucket.
+Point ids get a literal bucket predicate, ``bucket == bucket(lit(id))``:
+Catalyst folds it to a constant, and the scan shows a static
+``PartitionFilters: [bucket = n]``. Id sets derived from edges join
+``nodes`` on ``(node_id, bucket)`` against a ``F.broadcast`` id side
+that carries ``bucket(node_id)``; dynamic partition pruning then reads
+only the matched node buckets. The broadcast hint is required: the
+planner sizes a filtered path-based parquet side as the whole table, so
+without it a large edges table plans a sort-merge join and DPP (which
+reuses only a broadcast) is dropped.
 
 Scale notes:
-- point lookups (`node_id == X`) prune to one bucket partition (the
-  tables are written partitionBy(bucket) with bucket = pmod(xxhash64
-  (id), N) — the predicate is derivable, so callers pass through
-  :func:`with_bucket_pruning` to add the bucket predicate explicitly).
 - top-k similarity = score + ``orderBy().limit(k)`` — Catalyst plans
   TakeOrderedAndProject (no global sort materialization).
 - cosine scoring is a native Catalyst expression over the zipped
@@ -34,27 +47,32 @@ DEFAULT_TOP_K = 5  # reference search_chunk.py:32
 DEFAULT_THRESHOLD = 0.0  # reference search_chunk.py:33
 
 
+def _bucket_of(node_id: int) -> Column:
+    """The bucket of one literal id; Catalyst folds it to a constant."""
+    return bucket(F.lit(int(node_id)).cast("long"), N_BUCKETS)
+
+
+def _with_bucket(ids: DataFrame) -> DataFrame:
+    """A broadcast ``(node_id, bucket)`` id side: joined to ``nodes`` on
+    both columns, it lets DPP prune the nodes scan to its buckets."""
+    return F.broadcast(ids.withColumn("bucket", bucket("node_id", N_BUCKETS)))
+
+
 def lookup_by_id(nodes: DataFrame, ids: list[int], id_col: str = "node_id") -> DataFrame:
     """Point lookup with explicit bucket-partition pruning.
 
     The tables are written ``partitionBy(bucket)`` with
     ``bucket = pmod(xxhash64(id), N)``; an ``id IN (...)`` filter alone
     does not prune partitions (the optimizer cannot invert the hash),
-    so the matching bucket literals are computed first — one tiny local
-    job over the id literals — and added as a partition predicate. On
-    Iceberg this is what hidden ``bucket(N, id)`` partitioning does
-    automatically; on plain parquet it must be explicit.
+    so each id's bucket is added as a literal partition predicate,
+    which Catalyst constant-folds — no job runs. On Iceberg this is
+    what hidden ``bucket(N, id)`` partitioning does automatically; on
+    plain parquet it must be explicit.
     """
-    ids = [int(i) for i in ids]
-    spark = nodes.sparkSession
-    buckets = [
-        r["b"]
-        for r in spark.createDataFrame([(i,) for i in ids], f"{id_col} long")
-        .select(bucket(id_col, N_BUCKETS).alias("b"))
-        .distinct()
-        .collect()
-    ]
-    return nodes.where(F.col("bucket").isin(buckets) & F.col(id_col).isin(ids))
+    ids = sorted({int(i) for i in ids})
+    return nodes.where(
+        F.col("bucket").isin([_bucket_of(i) for i in ids]) & F.col(id_col).isin(ids)
+    )
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -72,19 +90,25 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def search_corpus(nodes: DataFrame) -> DataFrame:
-    """Q1 (tools/search_corpus.py:23-27): all corpora ordered by name."""
+    """Q1 (tools/search_corpus.py:23-27): all corpora ordered by name.
+
+    One partition sorted in place: the scan stays parallel, and no
+    range exchange samples the input in a job of its own."""
     return (
         nodes.where(F.col("label") == "Corpus")
         .select(F.col("node_id").alias("contract_id"), F.col("name").alias("contract_name"))
-        .orderBy("contract_name")
+        .repartition(1)
+        .sortWithinPartitions("contract_name")
     )
 
 
 def get_corpus_toc(nodes: DataFrame, corpus_id: int) -> DataFrame:
     """Q2 (tools/get_corpus_toc.py:29-32): point lookup -> TOC JSON."""
-    return nodes.where(
-        (F.col("label") == "Corpus") & (F.col("node_id") == corpus_id)
-    ).select("node_id", "toc_json")
+    return (
+        lookup_by_id(nodes, [corpus_id])
+        .where(F.col("label") == "Corpus")
+        .select("node_id", "toc_json")
+    )
 
 
 def reshape_toc(df: DataFrame, toc_col: str = "toc_json") -> DataFrame:
@@ -137,7 +161,9 @@ def search_children(
     returns ``c.leaf`` — a property the write path never sets — so the
     ``leaf`` column is always null by construction."""
     kids = edges.where(
-        (F.col("type") == "CHILD") & (F.col("src_id") == parent_id)
+        (F.col("bucket") == _bucket_of(parent_id))
+        & (F.col("type") == "CHILD")
+        & (F.col("src_id") == parent_id)
     ).select(F.col("dst_id").alias("node_id"))
     qv = F.array(*[F.lit(float(x)) for x in query_vector])
     cols = [
@@ -151,7 +177,7 @@ def search_children(
     if sub_variant:
         cols.append(F.lit(None).cast("boolean").alias("leaf"))
     return (
-        nodes.join(kids, "node_id")
+        nodes.join(_with_bucket(kids), ["node_id", "bucket"])
         .where(F.col("vector").isNotNull())
         .withColumn("score", cosine(F.col("vector"), qv))
         .where(F.col("score") > threshold)
@@ -163,15 +189,17 @@ def search_children(
 
 def search_neighbors(nodes: DataFrame, edges: DataFrame, chunk_id: int) -> DataFrame:
     """Q4 (tools/search_neighbor_chunk.py:30-40): both NEXT directions,
-    DISTINCT, summary-else-content."""
-    fwd = edges.where((F.col("type") == "NEXT") & (F.col("src_id") == chunk_id)).select(
-        F.col("dst_id").alias("node_id")
-    )
-    bwd = edges.where((F.col("type") == "NEXT") & (F.col("dst_id") == chunk_id)).select(
-        F.col("src_id").alias("node_id")
-    )
-    nb = fwd.unionByName(bwd).dropDuplicates(["node_id"])
-    return nodes.join(nb, "node_id").select(
+    DISTINCT, summary-else-content.
+
+    PREV is the swap of NEXT, so both directions are the chunk's
+    outgoing NEXT and PREV edges, all in its one edges bucket; the
+    semi-join keeps each neighbour node once."""
+    nb = edges.where(
+        (F.col("bucket") == _bucket_of(chunk_id))
+        & F.col("type").isin("NEXT", "PREV")
+        & (F.col("src_id") == chunk_id)
+    ).select(F.col("dst_id").alias("node_id"))
+    return nodes.join(_with_bucket(nb), ["node_id", "bucket"], "left_semi").select(
         "node_id",
         "name",
         summary_else_content(
@@ -188,9 +216,7 @@ def resolve_response(
     dropping chunks whose content is not found verbatim (the
     reference's ``content_file.find`` -> drop-if-absent semantics,
     response.py:50-61)."""
-    sel = nodes.where(F.col("node_id").isin([int(i) for i in chunk_ids])).select(
-        "node_id", "name", "url", "content"
-    )
+    sel = lookup_by_id(nodes, chunk_ids).select("node_id", "name", "url", "content")
     joined = sel.join(pages.select("url", "text"), "url")
     loc = F.expr("instr(text, content)")  # first occurrence, 1-based, 0 if absent
     return (

@@ -4,15 +4,19 @@ The reference is strictly batch (SURVEY.md §2.9), but every stage here
 is a pure ``DataFrame -> DataFrame`` transform, so the same extraction
 DAG runs unmodified over a stream: ``readStream`` on the pages source
 -> extract/mention/triple transforms (all narrow + mapInPandas, fully
-streaming-compatible) -> ``foreachBatch`` materialization into the
-same bucketed tables with deterministic IDs. Deterministic
-content-derived node ids make the streaming sink idempotent under
-replays — exactly-once effect on top of at-least-once delivery.
+streaming-compatible) -> ``foreachBatch`` appends of the canonical
+triples to ``<workdir>/triples_stream``. Deterministic
+content-derived ids make the streaming sink idempotent under replays
+(:func:`read_stream_triples` drops re-delivered rows) — exactly-once
+effect on top of at-least-once delivery.
 
 Entity linking / CC are iterative (not expressible as a single
-incremental operator); production shape is micro-batch re-linking in
-``foreachBatch`` over the accumulated distinct-surface table, which is
-what :func:`stream_pages_to_graph` does per trigger.
+incremental operator). :func:`stream_pages_to_graph` links each
+micro-batch's own mentions only, in ``foreachBatch``: it does not
+re-link over the surfaces of earlier batches, so with more than one
+micro-batch a surface can get another canonical id than one link over
+all pages gives, and the streamed triples differ from a batch build of
+the same pages (ROADMAP direction 7).
 
 Windowed/watermarked aggregation over an event stream (late-data
 tolerant) is in :func:`stream_event_windows` — the streaming twin of

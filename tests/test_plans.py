@@ -101,6 +101,82 @@ def test_lookup_by_id_prunes_buckets(spark, tmp_path):
     assert m and "bucket" in m.group(1), phys[:500]
 
 
+@pytest.fixture(scope="module")
+def kg(spark, tmp_path_factory):
+    from legal_knowledge_graph_spark.pipeline import run_pipeline
+
+    pages = generate_pages(spark, 20)
+    out = run_pipeline(spark, pages, str(tmp_path_factory.mktemp("kg_query")))
+    nodes, edges = out["nodes"], out["edges"]
+    chunk = (
+        edges.where(F.col("type") == "NEXT").orderBy("src_id").first()["src_id"]
+    )
+    parent = edges.where(F.col("type") == "CHILD").orderBy("src_id").first()["src_id"]
+    return {"pages": pages, "nodes": nodes, "edges": edges, "chunk": chunk, "parent": parent}
+
+
+def _partition_filters(df) -> dict[str, list[str]]:
+    """PartitionFilters of each parquet scan, keyed by table (an edges
+    scan reads ``src_id``)."""
+    out: dict[str, list[str]] = {"nodes": [], "edges": []}
+    scans = re.finditer(
+        r"FileScan parquet \[([^\]]*)\][^\n]*PartitionFilters: \[([^\]]*)\]", _physical(df)
+    )
+    for m in scans:
+        out["edges" if "src_id" in m.group(1) else "nodes"].append(m.group(2))
+    return out
+
+
+def test_point_tools_prune_node_buckets(kg):
+    """Q2 and Q5 read only the node buckets of their literal ids."""
+    from legal_knowledge_graph_spark.operators.query import get_corpus_toc, resolve_response
+
+    corpus = kg["nodes"].where(F.col("label") == "Corpus").first()["node_id"]
+    for df in (
+        get_corpus_toc(kg["nodes"], corpus),
+        resolve_response(kg["nodes"], kg["pages"], [kg["chunk"], kg["parent"]]),
+    ):
+        scans = _partition_filters(df)["nodes"]
+        assert scans and all(re.search(r"bucket#\d+ (=|IN) ", f) for f in scans), scans
+
+
+def test_edge_tools_prune_both_tables(kg):
+    """Q3 and Q4 read one literal edges bucket and prune the nodes scan
+    dynamically to the buckets of the ids they found."""
+    from legal_knowledge_graph_spark.operators.query import search_children, search_neighbors
+
+    for df in (
+        search_children(kg["nodes"], kg["edges"], kg["parent"], [0.1] * 64),
+        search_neighbors(kg["nodes"], kg["edges"], kg["chunk"]),
+    ):
+        scans = _partition_filters(df)
+        assert scans["edges"] and all(
+            re.search(r"bucket#\d+ = \d+\)", f) for f in scans["edges"]
+        ), scans
+        assert scans["nodes"] and all(
+            "dynamicpruningexpression(bucket" in f for f in scans["nodes"]
+        ), scans
+
+
+def test_search_corpus_has_no_range_exchange(kg):
+    from legal_knowledge_graph_spark.operators.query import search_corpus
+
+    assert "rangepartitioning" not in _physical(search_corpus(kg["nodes"]))
+
+
+def test_lookup_by_id_runs_no_job(spark, kg):
+    from legal_knowledge_graph_spark.operators.query import lookup_by_id
+
+    sc = spark.sparkContext
+    sc.setJobGroup("test-lookup-plan", "test-lookup-plan")
+    try:
+        _physical(lookup_by_id(kg["nodes"], [kg["chunk"], kg["parent"], kg["chunk"]]))
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert sc.statusTracker().getJobIdsForGroup("test-lookup-plan") == []
+
+
 def test_split_stays_in_codegen(spark, pages_path):
     """The T1 split projection must be inside a WholeStageCodegen span
     (native expressions, no Python in the loop)."""

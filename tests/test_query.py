@@ -10,7 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from legal_knowledge_graph_spark.datagen import generate_pages
+from legal_knowledge_graph_spark.functions.text import summary_else_content
 from legal_knowledge_graph_spark.operators.query import (
+    cosine,
     get_corpus_toc,
     lookup_by_id,
     resolve_response,
@@ -124,6 +126,121 @@ def test_q5_resolve_and_bucket_pruning(graph):
     # the plan carries a partition filter on bucket
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "bucket" in plan
+
+
+# Unpruned full-scan formulations of Q3-Q5: no bucket predicate, NEXT
+# edges only. The pruned tools must give the same rows on every input.
+
+
+def _text():
+    return summary_else_content(
+        F.coalesce("summary", F.lit("")), F.coalesce("content", F.lit(""))
+    ).alias("text")
+
+
+def _full_scan_children(nodes, edges, parent_id, qv, top_k=5):
+    kids = edges.where(
+        (F.col("type") == "CHILD") & (F.col("src_id") == parent_id)
+    ).select(F.col("dst_id").alias("node_id"))
+    q = F.array(*[F.lit(float(x)) for x in qv])
+    return (
+        nodes.join(kids, "node_id")
+        .where(F.col("vector").isNotNull())
+        .withColumn("score", cosine(F.col("vector"), q))
+        .where(F.col("score") > 0.0)
+        .select("node_id", "name", _text(), "score")
+        .orderBy(F.desc("score"), "node_id")
+        .limit(top_k)
+    )
+
+
+def _full_scan_neighbors(nodes, edges, chunk_id):
+    nxt = edges.where(F.col("type") == "NEXT")
+    fwd = nxt.where(F.col("src_id") == chunk_id).select(F.col("dst_id").alias("node_id"))
+    bwd = nxt.where(F.col("dst_id") == chunk_id).select(F.col("src_id").alias("node_id"))
+    nb = fwd.unionByName(bwd).dropDuplicates(["node_id"])
+    return nodes.join(nb, "node_id").select("node_id", "name", _text())
+
+
+def _full_scan_resolve(nodes, pages, chunk_ids):
+    sel = nodes.where(F.col("node_id").isin([int(i) for i in chunk_ids]))
+    loc = F.expr("instr(text, content)")
+    return (
+        sel.select("node_id", "name", "url", "content")
+        .join(pages.select("url", "text"), "url")
+        .withColumn("_loc", loc)
+        .where(F.col("_loc") > 0)
+        .select(
+            "node_id",
+            "name",
+            F.col("url").alias("file_path"),
+            (F.col("_loc") - 1).cast("long").alias("span_start"),
+            (F.col("_loc") - 1 + F.length("content")).cast("long").alias("span_end"),
+            "content",
+        )
+    )
+
+
+def _same_rows(got, want) -> list:
+    rows = sorted(tuple(r) for r in got.collect())
+    assert rows == sorted(tuple(r) for r in want.collect())
+    return rows
+
+
+def test_q5_degenerate_ids_match_full_scan(graph):
+    nodes, pages = graph["nodes"], graph["pages"]
+    chunks = [
+        r["node_id"]
+        for r in nodes.where(F.col("label") == "Chunk").orderBy("node_id").limit(2).collect()
+    ]
+    missing = 1 + max(r["node_id"] for r in nodes.select("node_id").collect())
+    found = _same_rows(
+        resolve_response(nodes, pages, chunks), _full_scan_resolve(nodes, pages, chunks)
+    )
+    assert found
+    for ids, want in [([], []), (chunks + chunks[:1] * 3, found), ([missing, *chunks], found)]:
+        rows = _same_rows(
+            resolve_response(nodes, pages, ids), _full_scan_resolve(nodes, pages, ids)
+        )
+        assert rows == want, ids
+
+
+def test_q3_childless_parent_matches_full_scan(graph):
+    nodes, edges = graph["nodes"], graph["edges"]
+    parents = edges.where(F.col("type") == "CHILD").select(F.col("src_id").alias("node_id"))
+    leaf = (
+        nodes.where(F.col("label") == "Chunk")
+        .join(parents, "node_id", "left_anti")
+        .orderBy("node_id")
+        .first()
+    )
+    qv = [float(x) for x in leaf["vector"]]
+    rows = _same_rows(
+        search_children(nodes, edges, leaf["node_id"], qv),
+        _full_scan_children(nodes, edges, leaf["node_id"], qv),
+    )
+    assert rows == []
+
+
+def test_q4_chain_ends_and_lone_node_match_full_scan(graph):
+    """A first and a last sibling have one neighbour each; a node with
+    no NEXT/PREV edge (a Corpus node: every Chunk of the fixture has a
+    sibling) has none."""
+    nodes, edges = graph["nodes"], graph["edges"]
+    nxt = edges.where(F.col("type") == "NEXT")
+    first = nxt.join(nxt.select(F.col("dst_id").alias("src_id")), "src_id", "left_anti")
+    last = nxt.join(nxt.select(F.col("src_id").alias("dst_id")), "dst_id", "left_anti")
+    lone = nodes.where(F.col("label") == "Corpus").orderBy("node_id").first()["node_id"]
+    cases = [
+        (first.orderBy("src_id").first()["src_id"], 1),
+        (last.orderBy("dst_id").first()["dst_id"], 1),
+        (lone, 0),
+    ]
+    for chunk, n in cases:
+        rows = _same_rows(
+            search_neighbors(nodes, edges, chunk), _full_scan_neighbors(nodes, edges, chunk)
+        )
+        assert len(rows) == n, chunk
 
 
 def test_span_overlap_pr(spark):
