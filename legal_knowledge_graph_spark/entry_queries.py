@@ -782,13 +782,12 @@ def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 — the reference's per-file seeded pseudo-random benchmark
     sampling (data_loader.py:71-79, MAX=194) re-expressed as
     deterministic hash-ordered sampling: ORDER BY md5(key) LIMIT 194 —
-    the distributed-safe equivalent of 'seeded random by file_path'."""
-    d = _docs(spark, sf_dir)
-    return (
-        d.withColumn("sample_key", F.md5(F.col("doc_id").cast("string")))
-        .orderBy("sample_key")
-        .limit(194)
-        .select("doc_id", "sample_key")
+    the distributed-safe equivalent of 'seeded random by file_path'
+    (``readers.sample_tests``)."""
+    from legal_knowledge_graph_spark.sources.readers import sample_tests
+
+    return sample_tests(_docs(spark, sf_dir), "doc_id").select(
+        "doc_id", F.md5(F.col("doc_id").cast("string")).alias("sample_key")
     )
 
 
@@ -803,19 +802,17 @@ limit 194
 def q_referenced_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 — 'read only the corpus files referenced by sampled tests':
     a semi-join of the corpus against the referencing fixture keys,
-    sorted (data_loader.py:92-104). Fixture keys derived from
-    lineitem."""
-    d = _docs(spark, sf_dir)
+    sorted (data_loader.py:92-104; ``readers.referenced_corpus``).
+    Fixture keys derived from lineitem."""
+    from legal_knowledge_graph_spark.sources.readers import referenced_corpus
+
     refs = (
         _lineitem(spark, sf_dir)
         .where("l_linenumber = 1")
-        .select((F.col("l_orderkey") % 700).alias("doc_id"))
-        .distinct()
+        .select((F.col("l_orderkey") % 700).alias("file_path"))
     )
-    return (
-        d.join(refs, "doc_id", "left_semi")
-        .select("doc_id", F.col("n_chars").cast("long").alias("n_chars"))
-        .orderBy("doc_id")
+    return referenced_corpus(_docs(spark, sf_dir), refs, "doc_id").select(
+        "doc_id", F.col("n_chars").cast("long").alias("n_chars")
     )
 
 

@@ -13,8 +13,14 @@ operators/dedup.py in round 6).
 from __future__ import annotations
 
 import functools
+import re
 
 from pyspark.sql import DataFrame
+
+# a shuffle node in a physical plan string: "Exchange hashpartitioning(..."
+# (not "BroadcastExchange ..."); a reused shuffle prints
+# "ReusedExchange [...], Exchange ..."
+_SHUFFLE_RE = re.compile(r"\bExchange\b")
 
 
 def ensure_parallel(df: DataFrame) -> DataFrame:
@@ -22,19 +28,23 @@ def ensure_parallel(df: DataFrame) -> DataFrame:
     default parallelism; no-op otherwise.
 
     Under-parallelism only afflicts NARROW plans rooted at a few input
-    splits: any Exchange between the scan and this operator already
-    spreads the data across the (cores-scaled) shuffle partitions. The
-    Exchange probe matters for cost too — ``df.rdd`` on an AQE plan
-    triggers getFinalPhysicalPlan(), which EXECUTES every upstream
-    query stage on the driver thread at plan-BUILD time and then
-    re-executes it at action time (measured: ~5 s of serial build time
-    in the 400k-page nodes stage before this check existed). On an
-    exchange-free plan ``df.rdd`` is pure planning and stays cheap."""
+    splits: any shuffle Exchange between the scan and this operator
+    already spreads the data across the (cores-scaled) shuffle
+    partitions. A ``BroadcastExchange`` does not: the stream side of a
+    broadcast join keeps its scan's partitions, so only a shuffle
+    ``Exchange`` counts. The Exchange probe matters for cost too —
+    ``df.rdd`` on an AQE plan triggers getFinalPhysicalPlan(), which
+    EXECUTES every upstream query stage on the driver thread at
+    plan-BUILD time and then re-executes it at action time (measured:
+    ~5 s of serial build time in the 400k-page nodes stage before this
+    check existed). On an exchange-free plan ``df.rdd`` is pure
+    planning and stays cheap; on a broadcast-only plan it runs the
+    small build side once more."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if target <= 1:
         return df
     plan = df._jdf.queryExecution().executedPlan().toString()
-    if "Exchange" in plan:
+    if _SHUFFLE_RE.search(plan):
         return df
     if df.rdd.getNumPartitions() < max(target // 2, 2):
         return df.repartition(target)

@@ -38,6 +38,13 @@ _TOKEN_RE = re.compile(r"\S+")
 # oracle with the cutoff forced to each side.
 _VECTORIZE_MIN_WINDOWS = 160
 
+# Codepoints whose prefix-sum array a DocAligner keeps (least recently
+# used evicted first): one int32 array of len(content)+1 each, so a
+# document aligned against many diverse targets stays bounded (64 x
+# 4 bytes x doc length). Targets share most of their alphabet, so a
+# miss is rare; a miss recomputes the array.
+CHAR_CUM_CAP = 64
+
 
 class DocAligner:
     """Per-document alignment context: tokenization, lowercase view,
@@ -89,8 +96,9 @@ class DocAligner:
     def _cum_for_char(self, code: int):
         """Prefix-sum occurrence count of one codepoint over the
         lowercased content: cum[i] = occurrences in content_lower[:i].
-        Cached per document — targets share most of their alphabet."""
-        cum = self._char_cum.get(code)
+        Cached per document in an LRU of ``CHAR_CUM_CAP`` codepoints."""
+        cache = self._char_cum
+        cum = cache.pop(code, None)
         if cum is None:
             import numpy as np
 
@@ -101,7 +109,9 @@ class DocAligner:
                 )
             cum = np.zeros(len(self._codes) + 1, dtype=np.int32)
             np.cumsum(self._codes == code, out=cum[1:], dtype=np.int32)
-            self._char_cum[code] = cum
+            if len(cache) >= CHAR_CUM_CAP:
+                del cache[next(iter(cache))]
+        cache[code] = cum  # dicts keep insertion order: last = most recent
         return cum
 
     def best_window(self, target_sentence: str) -> tuple[int, int, float]:

@@ -20,7 +20,7 @@ Scale design:
 - everything is keyed by *distinct normalized surface*, not mention —
   the mention table (trillions of rows at 10^12 docs) is reduced with
   one map-side-combinable ``distinct`` before any pairwise work.
-- band buckets are capped (``max_block``): a stop-surface bucket of B
+- band buckets are capped (``MAX_BLOCK``): a stop-surface bucket of B
   members would otherwise emit B^2 pairs. The cap is dedup's
   ``_banded_pairs``; ``dedup.lsh_candidate_pairs(metrics=)`` counts
   the dropped buckets of a signature table when needed.
@@ -36,7 +36,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -50,33 +50,29 @@ from legal_knowledge_graph_spark.operators.dedup import (
     shingles,
 )
 
-DEFAULT_BANDS = 8
-DEFAULT_ROWS_PER_BAND = 2
-DEFAULT_RATIO_THRESHOLD = 0.84
-DEFAULT_MAX_BLOCK = 64
+BANDS = 8
+ROWS_PER_BAND = 2
+RATIO_THRESHOLD = 0.84
+MAX_BLOCK = 64
 
 
-def candidate_pairs(
-    surfaces: DataFrame,
-    bands: int = DEFAULT_BANDS,
-    rows_per_band: int = DEFAULT_ROWS_PER_BAND,
-    max_block: int = DEFAULT_MAX_BLOCK,
-) -> DataFrame:
+def candidate_pairs(surfaces: DataFrame) -> DataFrame:
     """surfaces(surface_norm) -> (left, right) candidate pairs.
 
-    MinHash with ``bands * rows_per_band`` permutations; a pair is a
-    candidate if all minhashes of any band agree. Returns normalized
-    surface string pairs with left < right.
+    MinHash with ``BANDS * ROWS_PER_BAND`` permutations; a pair is a
+    candidate if all minhashes of any band agree (band buckets capped at
+    ``MAX_BLOCK`` members). Returns normalized surface string pairs with
+    left < right.
 
     The shingles, the permutation-min signatures and the capped band
     self-join are dedup's; only the gram hash differs: one xxhash64 per
     gram (dedup uses md5, which its DuckDB oracle reproduces).
     """
-    n_perm = bands * rows_per_band
+    n_perm = BANDS * ROWS_PER_BAND
     sh = shingles(surfaces, "surface_norm", "surface_norm")
     g = F.pmod(F.xxhash64(F.col("gram")), F.lit(MINHASH_P))
     sigs = _perm_min(sh.select("doc_id", g.alias("g")), n_perm)
-    return lsh_candidate_pairs(sigs, n_perm, bands, max_block).select(
+    return lsh_candidate_pairs(sigs, n_perm, BANDS, MAX_BLOCK).select(
         F.col("doc_a").alias("left"), F.col("doc_b").alias("right")
     )
 
@@ -156,61 +152,47 @@ def score_pairs(pairs: DataFrame, threshold: float | None = None) -> DataFrame:
     return pairs.mapInPandas(run_pruned, _PAIR_SCHEMA)
 
 
-def link_entities(
-    mentions: DataFrame,
-    ratio_threshold: float = DEFAULT_RATIO_THRESHOLD,
-    bands: int = DEFAULT_BANDS,
-    rows_per_band: int = DEFAULT_ROWS_PER_BAND,
-    max_block: int = DEFAULT_MAX_BLOCK,
-) -> DataFrame:
+def link_entities(mentions: DataFrame) -> DataFrame:
     """mentions(url, surface, ...) -> canonical map
     (surface_norm, canonical_id, component).
 
-    ``canonical_id`` is the lexicographically smallest normalized
-    surface in the component — deterministic and content-derived, so
-    re-runs produce identical ids (idempotent materialization).
+    A surface's CC node id is ``xxhash64(surface_norm)``, computed in
+    place on both ends of every scored pair (``RATIO_THRESHOLD``), and
+    ``component`` is the smallest such id in its connected component (a
+    surface in no kept pair is its own component). ``canonical_id`` is
+    the lexicographically smallest normalized surface in the component,
+    one window over ``component`` (components are small: the largest
+    holds 2 surfaces at 500 and 4,000 seeded pages) — deterministic and
+    content-derived, so re-runs produce identical ids (idempotent
+    materialization).
     """
-    # The distinct surface table is the stage's hub: candidate_pairs,
-    # the sid map, and the final assignment all consume it, and the CC
-    # convergence loop adds its own actions on top — without a
-    # checkpoint the mention-scan -> normalize -> distinct lineage
-    # re-executes once per downstream action (measured 3x at bench SF).
-    # It is also the SMALL table of the design (distinct surfaces, not
-    # mentions), so materializing it is cheap at any scale.
+    # The distinct surface table is the stage's hub: candidate_pairs and
+    # the final assignment both consume it, and the CC convergence loop
+    # adds its own actions on top — without a checkpoint the
+    # mention-scan -> normalize -> distinct lineage re-executes once per
+    # downstream action (measured 3x at bench SF). It is also the SMALL
+    # table of the design (distinct surfaces, not mentions), so
+    # materializing it is cheap at any scale.
     surfaces = (
         mentions.select(normalize_surface(F.col("surface")).alias("surface_norm"))
         .where(F.length("surface_norm") > 0)
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # stable numeric node ids for CC
-    with_id = surfaces.withColumn("sid", F.xxhash64("surface_norm"))
-
-    pairs = candidate_pairs(surfaces, bands, rows_per_band, max_block)
-    edges_str = score_pairs(pairs, threshold=ratio_threshold)
-
-    sid_map = with_id.select("surface_norm", "sid")
-    edges = (
-        edges_str.join(sid_map.withColumnRenamed("surface_norm", "left").withColumnRenamed("sid", "src"), "left")
-        .join(sid_map.withColumnRenamed("surface_norm", "right").withColumnRenamed("sid", "dst"), "right")
-        .select("src", "dst")
+    edges = score_pairs(candidate_pairs(surfaces), threshold=RATIO_THRESHOLD).select(
+        F.xxhash64("left").alias("src"), F.xxhash64("right").alias("dst")
     )
-
     comp = connected_components(edges)
-    # assigned feeds two consumers (the reps aggregation and the final
-    # join) — checkpoint so the CC output join runs once, not once per
-    # consumer. Small by design: one row per distinct surface.
-    assigned = (
-        with_id.join(comp, with_id["sid"] == comp["node"], "left")
+    sid = F.xxhash64("surface_norm")
+    return (
+        surfaces.join(comp, sid == comp["node"], "left")
+        .select("surface_norm", F.coalesce("component", sid).alias("component"))
         .select(
             "surface_norm",
-            "sid",
-            F.coalesce("component", F.col("sid")).alias("component"),
+            F.min("surface_norm").over(Window.partitionBy("component")).alias("canonical_id"),
+            "component",
         )
-        .localCheckpoint(eager=False)
     )
-    reps = assigned.groupBy("component").agg(F.min("surface_norm").alias("canonical_id"))
-    return assigned.join(reps, "component").select("surface_norm", "canonical_id", "component")
 
 
 def cluster_entity_vectors(

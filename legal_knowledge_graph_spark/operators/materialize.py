@@ -29,9 +29,9 @@ Scale notes:
   are written ``partitionBy(bucket)`` — the plain-parquet equivalent
   of Iceberg ``bucket(N, node_id)`` partitioning: point lookups and
   id-equi-joins prune to one bucket.
-- NEXT derivation is one window over (url, parent) — partition-local
-  after a single shuffle on url; PREV is a projection (no second
-  shuffle).
+- CHILD and NEXT derivation is one window over (url, parent) after a
+  single shuffle; the CHILD parent id is computed from the window, not
+  joined for, and PREV is a projection (no second shuffle).
 - entity-degree metrics use two-phase **salted** aggregation: the head
   entity (one canonical id on ~20% of mentions) would otherwise land
   its entire count on one reducer. Salt -> partial agg -> final agg is
@@ -181,50 +181,53 @@ def absolute_chunks(chunks: DataFrame, extracted: DataFrame) -> DataFrame:
 
 
 def tree_edges(chunks_abs: DataFrame) -> DataFrame:
-    """CHILD + NEXT + PREV edges from the chunk tree.
+    """CHILD + NEXT + PREV edges from the chunk tree, in one window pass
+    over (url, parent_path) — one exchange, no join.
 
     CHILD: Corpus->article (parent_path null) and article->section —
     reference database.py:137-139 + top-level chain 166-180.
     NEXT: lag over (url, parent) ordered by sibling_order — exactly the
     consecutive-sibling MERGE loop at database.py:140-151. PREV is the
     swap (the reference writes both directions explicitly).
+
+    A CHILD edge's parent id is computed from its siblings, not joined
+    for: ``chunker.build_chunk_tree`` gives each parent the span (min
+    child start, max child end), and ``absolute_chunks`` adds one offset
+    per url to every row, so the parent's node id is
+    ``node_id(url, parent_path, min(span_start), max(span_end))`` over
+    the (url, parent_path) window. Roots (parent_path null) hang off
+    the url's Corpus node.
     """
+    w = Window.partitionBy("url", "parent_path")
+    nid = node_id("url", "path_key", "span_start", "span_end")
+    parent_nid = node_id(
+        "url", "parent_path", F.min("span_start").over(w), F.max("span_end").over(w)
+    )
     ch = chunks_abs.select(
         "url",
-        "path_key",
-        "parent_path",
-        "sibling_order",
-        node_id("url", "path_key", "span_start", "span_end").alias("nid"),
+        nid.alias("nid"),
+        F.when(F.col("parent_path").isNull(), node_id("url", F.lit("Corpus")))
+        .otherwise(parent_nid)
+        .alias("pid"),
+        F.lag(nid).over(w.orderBy("sibling_order")).alias("prev_nid"),
     )
-    corpus_id = node_id("url", F.lit("Corpus"))
-    parents = ch.select(
-        "url", F.col("path_key").alias("parent_path"), F.col("nid").alias("pid")
+    child = ch.select(
+        F.col("pid").alias("src_id"),
+        F.col("nid").alias("dst_id"),
+        F.lit("CHILD").alias("type"),
+        F.lit(None).cast("string").alias("pred"),
+        "url",
+        F.lit(None).cast("long").alias("span_start"),
+        F.lit(None).cast("long").alias("span_end"),
     )
-    child = (
-        ch.join(parents, ["url", "parent_path"], "left")
-        .select(
-            F.coalesce("pid", corpus_id).alias("src_id"),
-            F.col("nid").alias("dst_id"),
-            F.lit("CHILD").alias("type"),
-            F.lit(None).cast("string").alias("pred"),
-            "url",
-            F.lit(None).cast("long").alias("span_start"),
-            F.lit(None).cast("long").alias("span_end"),
-        )
-    )
-    w = Window.partitionBy("url", "parent_path").orderBy("sibling_order")
-    nxt = (
-        ch.withColumn("prev_nid", F.lag("nid").over(w))
-        .where(F.col("prev_nid").isNotNull())
-        .select(
-            F.col("prev_nid").alias("src_id"),
-            F.col("nid").alias("dst_id"),
-            F.lit("NEXT").alias("type"),
-            F.lit(None).cast("string").alias("pred"),
-            "url",
-            F.lit(None).cast("long").alias("span_start"),
-            F.lit(None).cast("long").alias("span_end"),
-        )
+    nxt = ch.where(F.col("prev_nid").isNotNull()).select(
+        F.col("prev_nid").alias("src_id"),
+        F.col("nid").alias("dst_id"),
+        F.lit("NEXT").alias("type"),
+        F.lit(None).cast("string").alias("pred"),
+        "url",
+        F.lit(None).cast("long").alias("span_start"),
+        F.lit(None).cast("long").alias("span_end"),
     )
     prv = nxt.select(
         F.col("dst_id").alias("src_id"),

@@ -200,20 +200,11 @@ def summarize_tree(chunks: DataFrame) -> DataFrame:
 
 
 def document_summaries(chunks_summarized: DataFrame) -> DataFrame:
-    """Corpus-level summary from top-level (depth==min) children —
-    reference summarizer.py:150-157. Returns (url, summary)."""
-    # min depth as a broadcast 1-row aggregate joined into the plan —
-    # the previous agg().collect() was an EAGER driver action at plan-
-    # BUILD time (a full extra job serializing the nodes stage; the
-    # round-6 decomposition measured it at ~6 s of the stage's serial
-    # floor at 400k pages). Equality-join semantics match the filter:
-    # empty input gives a null min, null == null is false, no rows.
-    min_depth = F.broadcast(
-        chunks_summarized.agg(F.min("depth").alias("_min_depth"))
-    )
-    top = chunks_summarized.join(
-        min_depth, F.col("depth") == F.col("_min_depth")
-    ).select(
+    """Corpus-level summary from each document's roots (the rows with a
+    null ``parent_path``: the depth-1 articles of every tree the chunker
+    builds), in sibling order — reference summarizer.py:150-157.
+    Returns (url, summary)."""
+    top = chunks_summarized.where(F.col("parent_path").isNull()).select(
         "url",
         "sibling_order",
         F.when(F.length(F.trim(F.coalesce("summary", F.lit("")))) > 0, F.col("summary"))

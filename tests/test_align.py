@@ -128,3 +128,37 @@ def test_vectorized_path_matches_oracle_on_large_fuzz():
             assert got_seq == want, (trial, content, target, got_seq, want)
     finally:
         al_mod._VECTORIZE_MIN_WINDOWS = saved
+
+
+def test_char_cum_cache_capped_matches_uncapped(monkeypatch):
+    """A document aligned against targets that span more codepoints
+    than ``CHAR_CUM_CAP`` keeps at most that many prefix-sum arrays
+    and returns the same windows as an aligner with an unbounded
+    cache (the LRU evicts and recomputes; counts are never stale)."""
+    import random
+
+    import legal_knowledge_graph_spark.operators.align as al_mod
+    from legal_knowledge_graph_spark.operators.align import DocAligner
+
+    rng = random.Random(5)
+    alphabet = "abcdefghijklmnopqrstuvwxyz0123456789éßж🎉"
+    words = ["".join(rng.choice(alphabet) for _ in range(rng.randrange(2, 7))) for _ in range(60)]
+    content = " ".join(rng.choice(words) for _ in range(400))
+    targets = [" ".join(rng.choice(words) for _ in range(rng.randrange(2, 6))) for _ in range(40)]
+    targets += [t[::-1] for t in targets]  # mostly not verbatim: the bound scan runs
+    assert len(set("".join(targets).lower())) > 8
+
+    monkeypatch.setattr(al_mod, "_VECTORIZE_MIN_WINDOWS", 8)
+    monkeypatch.setattr(al_mod, "CHAR_CUM_CAP", 10**9)
+    uncapped = DocAligner(content)
+    want = [uncapped.best_window(t) for t in targets]
+    assert len(uncapped._char_cum) > 8  # the capped run must evict
+
+    monkeypatch.setattr(al_mod, "CHAR_CUM_CAP", 8)
+    capped = DocAligner(content)
+    got = []
+    for t in targets:
+        got.append(capped.best_window(t))
+        assert len(capped._char_cum) <= 8
+    assert got == want
+    assert want[:5] == [_oracle(content, t) for t in targets[:5]]

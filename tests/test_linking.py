@@ -337,13 +337,14 @@ def _digest(df):
     return len(rows), hashlib.sha1(repr(rows).encode()).hexdigest()[:10]
 
 
-def test_lsh_blocking_rows_pinned(spark):
+def test_lsh_blocking_rows_pinned(spark, monkeypatch):
     """Linking blocks through dedup's LSH primitives (shingles, the
     permutation-min signatures, the capped band self-join) with an
     xxhash64 gram hash. Its rows are pinned on 200 seeded pages: the
     candidate pairs under the default bucket cap and under a cap of 3
     (which drops most buckets), and the canonical map built on them."""
     from legal_knowledge_graph_spark.functions.text import normalize_surface
+    from legal_knowledge_graph_spark.operators import linking
     from legal_knowledge_graph_spark.operators.linking import candidate_pairs
 
     mentions = detect_mentions(
@@ -356,5 +357,27 @@ def test_lsh_blocking_rows_pinned(spark):
         .localCheckpoint()
     )
     assert _digest(candidate_pairs(surfaces)) == (14808, "7bf93c1a79")
-    assert _digest(candidate_pairs(surfaces, max_block=3)) == (534, "57ac738f4e")
     assert _digest(link_entities(mentions)) == (665, "4215ce3c2a")
+    monkeypatch.setattr(linking, "MAX_BLOCK", 3)
+    assert _digest(candidate_pairs(surfaces)) == (534, "57ac738f4e")
+
+
+def test_link_entities_job_count(spark):
+    """Linking computes its CC node ids (``xxhash64(surface)``) and its
+    canonical ids (a window min over the component) in place instead of
+    joining a sid map and a per-component aggregate back: building and
+    collecting the canonical map of 200 alias surfaces runs at most 14
+    Spark jobs."""
+    aliases = alias_table()[: 5 * 40]
+    mentions = spark.createDataFrame(
+        [(f"u{i}", s) for i, (s, _) in enumerate(aliases)], ["url", "surface"]
+    ).localCheckpoint()
+    sc = spark.sparkContext
+    sc.setJobGroup("test-link-jobs", "test-link-jobs")
+    try:
+        rows = link_entities(mentions).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert len(rows) == 80
+    assert len(sc.statusTracker().getJobIdsForGroup("test-link-jobs")) <= 14

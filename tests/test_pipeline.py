@@ -256,6 +256,56 @@ def test_lineage_matches_committed_tables(spark, built40):
     assert got == sorted(want)
 
 
+def _child_edges_by_join(chunks_abs):
+    """CHILD (src_id, dst_id, url) rows the way the edges stage first
+    derived them: each chunk joined to the row whose path_key is its
+    parent_path, the url's Corpus node when there is none."""
+    from legal_knowledge_graph_spark.functions.ids import node_id
+
+    ch = chunks_abs.select(
+        "url",
+        "path_key",
+        "parent_path",
+        node_id("url", "path_key", "span_start", "span_end").alias("nid"),
+    )
+    parents = ch.select(
+        "url", F.col("path_key").alias("parent_path"), F.col("nid").alias("pid")
+    )
+    return ch.join(parents, ["url", "parent_path"], "left").select(
+        F.coalesce("pid", node_id("url", F.lit("Corpus"))).alias("src_id"),
+        F.col("nid").alias("dst_id"),
+        "url",
+    )
+
+
+def test_tree_edges_child_rows_equal_join(spark, built40):
+    """``tree_edges`` computes a CHILD edge's parent id from the
+    (url, parent_path) window's span; on the committed 40-page tree and
+    on zero rows it gives the rows of the join formulation."""
+    from legal_knowledge_graph_spark.operators.materialize import (
+        absolute_chunks,
+        tree_edges,
+    )
+
+    wd, _ = built40
+    out = run_pipeline(spark, generate_pages(spark, 40), wd)
+    chunks_abs = absolute_chunks(out["chunks_summarized"], out["extracted"])
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def child(frame):
+        return tree_edges(frame).where(F.col("type") == "CHILD").select(
+            "src_id", "dst_id", "url"
+        )
+
+    want = rows(_child_edges_by_join(chunks_abs))
+    assert len(want) == chunks_abs.count() > 40
+    assert rows(child(chunks_abs)) == want
+    empty = chunks_abs.where(F.lit(False))
+    assert rows(child(empty)) == rows(_child_edges_by_join(empty)) == []
+
+
 def test_zero_page_build(spark, tmp_path):
     """Empty input: every stage commits, reads back empty with its
     stored schema, and a rerun reads all 9 stages."""

@@ -335,3 +335,59 @@ def test_attach_vectors_embeds_non_entity_rows_only(spark):
             text = summary if summary and summary.strip() else content
             want = embed_texts_np([text], 16)[0]
             assert np.array_equal(np.asarray(got[node_id], dtype=np.float32), want)
+
+
+def _chunk_tree(spark):
+    """A two-document chunk tree in the chunker's shape: depth-1
+    articles with a null parent, depth-2 sections under them."""
+    rows = [
+        ("u1", "A1", None, 1, 0, 0, 40, "", None, False),
+        ("u1", "A1/s1", "A1", 2, 0, 0, 20, "one. two.", "one.", True),
+        ("u1", "A1/s2", "A1", 2, 1, 20, 40, "three.", None, True),
+        ("u1", "A2", None, 1, 1, 40, 60, "", "a2.", False),
+        ("u1", "A2/s1", "A2", 2, 0, 40, 60, "four.", None, True),
+        ("u2", "A1", None, 1, 0, 5, 9, "", None, False),
+        ("u2", "A1/s1", "A1", 2, 0, 5, 9, "five.", None, True),
+    ]
+    return spark.createDataFrame(
+        rows,
+        "url string, path_key string, parent_path string, depth int, "
+        "sibling_order int, span_start long, span_end long, content string, "
+        "summary string, is_leaf boolean",
+    )
+
+
+def test_tree_edges_and_document_summaries_plan_no_join(spark):
+    """The CHILD edge's parent id comes from the (url, parent_path)
+    window and the document summary's roots from ``parent_path IS
+    NULL``: neither plan joins."""
+    from legal_knowledge_graph_spark.operators.materialize import tree_edges
+    from legal_knowledge_graph_spark.operators.summarize import document_summaries
+
+    chunks = _chunk_tree(spark)
+    for df in (tree_edges(chunks), document_summaries(chunks)):
+        phys = _physical(df)
+        assert "Join" not in phys, phys
+    # roots only, in sibling order; a section's summary never reaches it
+    assert dict(document_summaries(chunks).collect()) == {"u1": "a2.", "u2": ""}
+
+
+def test_ensure_parallel_repartitions_broadcast_stream_side(spark, tmp_path):
+    """A one-partition scan on the stream side of a broadcast join is
+    still narrow: the guard repartitions it. A shuffle upstream makes
+    the guard a no-op."""
+    from legal_knowledge_graph_spark.functions.partitioning import ensure_parallel
+
+    path = str(tmp_path / "one_split")
+    spark.range(0, 2000, 1, 1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    small = spark.createDataFrame([(i, f"v{i}") for i in range(10)], "id long, v string")
+    joined = scan.join(F.broadcast(small), "id")
+    assert "BroadcastExchange" in _physical(joined)
+    assert joined.rdd.getNumPartitions() == 1
+    target = spark.sparkContext.defaultParallelism
+    out = ensure_parallel(joined)
+    assert "RoundRobinPartitioning" in _physical(out)
+    assert out.rdd.getNumPartitions() == target
+    shuffled = scan.groupBy((F.col("id") % 7).alias("k")).count()
+    assert ensure_parallel(shuffled) is shuffled
