@@ -1405,12 +1405,12 @@ union all select url, path_key, summary from doc_out
 
 def q_align_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1/F2 verbatim path + M2 proposer (reference chunker.py:93-121,
-    139-148): the REAL fused propose+align stage over constructed
-    ARTICLE/Section bodies. Boundary sentences are verbatim and unique,
-    so the aligner's answer reduces to first-occurrence arithmetic the
-    oracle computes with strpos (the non-verbatim fuzzy tail stays
-    guarded by the difflib-oracle + hypothesis pytests)."""
-    from legal_knowledge_graph_spark.operators.chunker import propose_and_align
+    139-148): the REAL chunking stage over constructed ARTICLE/Section
+    bodies, its section (leaf) rows. Boundary sentences are verbatim
+    and unique, so the aligner's answer reduces to first-occurrence
+    arithmetic the oracle computes with strpos (the non-verbatim fuzzy
+    tail stays guarded by the difflib-oracle + hypothesis pytests)."""
+    from legal_knowledge_graph_spark.operators.chunker import chunk_documents
 
     body_sql = (
         "'intro words here\nARTICLE I.\nSection 1.1 alpha' || doc_id || "
@@ -1419,9 +1419,11 @@ def q_align_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "' v1 v2 v3 v4 v5 v6 v7 v8 v9 closing' || doc_id || ' q.'"
     )
     pages = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), F.expr(body_sql).alias("body")
+        F.col("doc_id").cast("string").alias("url"),
+        F.expr(body_sql).alias("body"),
+        F.lit(0).cast("long").alias("body_span_start"),
     )
-    leaves = propose_and_align(pages)
+    leaves = chunk_documents(pages).where("is_leaf")
     return leaves.select(
         "url",
         "path_key",

@@ -19,13 +19,12 @@ reference does, so spans are earned via fuzzy alignment rather than
 leaked from the proposal regex.
 
 Scale notes:
-- Proposal and alignment run in ONE ``mapInPandas`` pass over the
-  extracted pages: no shuffle, no join — each document's body and its
-  boundary proposals never leave the task that scanned them. At 10^12
-  docs this stage is embarrassingly parallel and CPU-bound.
-- Tree construction is a single ``groupBy(url, parent)`` aggregation
-  (map-side combinable); article rows are derived from leaf rows, so
-  there is exactly one shuffle keyed by url.
+- Proposal, alignment and tree construction run in ONE ``mapInPandas``
+  pass over the extracted pages: no shuffle, no join. A document's
+  tree is url-local, so the task that aligns its sections also emits
+  its article rows (as the reference's per-document ``transform_tree``
+  does) and carries its ``body_span_start``. At 10^12 docs this stage
+  is embarrassingly parallel and CPU-bound.
 """
 
 from __future__ import annotations
@@ -36,14 +35,13 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from legal_knowledge_graph_spark.operators.align import DocAligner
 
 # Heading detectors for the deterministic proposer. A learned model
-# slots into propose_and_align's inner function without changing the
-# stage contract (batch of (url, body) in -> boundary/leaf records out).
+# slots into chunk_documents' inner function without changing the
+# stage contract (batch of (url, body) in -> chunk tree rows out).
 _ARTICLE_RE = re.compile(r"^ARTICLE ([IVXLC]+)\.", re.MULTILINE)
 _SECTION_RE = re.compile(r"^Section (\d+)\.(\d+) ", re.MULTILINE)
 _TOKEN_RE = re.compile(r"\S+")
@@ -53,7 +51,7 @@ _TOKEN_RE = re.compile(r"\S+")
 #: sentences unique enough for the aligner while staying sentence-sized.
 BOUNDARY_TOKENS = 10
 
-LEAF_SCHEMA = T.StructType(
+CHUNK_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
         T.StructField("path_key", T.StringType(), False),
@@ -63,8 +61,8 @@ LEAF_SCHEMA = T.StructType(
         T.StructField("span_start", T.LongType(), False),
         T.StructField("span_end", T.LongType(), False),
         T.StructField("content", T.StringType(), False),
-        T.StructField("start_sentence", T.StringType(), False),
-        T.StructField("end_sentence", T.StringType(), False),
+        T.StructField("is_leaf", T.BooleanType(), False),
+        T.StructField("body_span_start", T.LongType(), False),
     ]
 )
 
@@ -82,126 +80,71 @@ def _boundary_sentences(body: str, seg_start: int, seg_end: int) -> tuple[str, s
     return start_sentence, end_sentence
 
 
-def propose_and_align(extracted: DataFrame) -> DataFrame:
-    """extracted(url, body, ...) -> leaf chunk rows (Section level) with
-    body-relative spans recovered by the fuzzy alignment kernel.
+def _document_tree(url: str, body: str, off: int) -> list[tuple]:
+    """One document's chunk rows: its aligned sections, then one article
+    row per article key that has sections.
 
-    One fused map stage: propose boundary sentences per section, then
-    align each (start_sentence, end_sentence) back into the body with
-    the reference-exact sliding-window matcher. Emitting the aligned
-    span (not the regex span) keeps parity with the reference's
-    LLM-propose -> fuzzy-align path, and the golden-chunk test verifies
-    the aligner actually recovers the planted spans.
+    A section's span is recovered by aligning its proposed (start,
+    end) boundary sentences back into the body with the
+    reference-exact sliding-window matcher (not copied from the
+    regex), so the golden-chunk test verifies the aligner. An article
+    row follows ``transform_tree`` (chunker.py:172-174): span = (min
+    child start, max child end), content = the child contents in
+    sibling order; its ``sibling_order`` is its rank by span start.
+    """
+    arts = list(_ARTICLE_RE.finditer(body))
+    if not arts:
+        return []
+    secs = list(_SECTION_RE.finditer(body))
+    # one tokenization/index per document, shared by every section's
+    # two boundary alignments
+    aligner = DocAligner(body)
+    rows = []
+    kids: dict[str, list[tuple[int, str, int, int]]] = {}
+    for ai, am in enumerate(arts):
+        art_key = f"ARTICLE_{am.group(1)}"
+        art_end = arts[ai + 1].start() if ai + 1 < len(arts) else len(body)
+        in_art = [m for m in secs if am.start() <= m.start() < art_end]
+        for si, sm in enumerate(in_art):
+            seg_end = in_art[si + 1].start() if si + 1 < len(in_art) else art_end
+            start_sent, end_sent = _boundary_sentences(body, sm.start(), seg_end)
+            if not start_sent:
+                continue
+            s, e = aligner.sentence_range(start_sent, end_sent)
+            path_key = f"{art_key}/section_{sm.group(1)}_{sm.group(2)}"
+            rows.append((url, path_key, art_key, 2, si, s, e, body[s:e], True, off))
+            # a repeated ARTICLE heading shares its key: its sections
+            # join one article row, ordered by (sibling_order, content)
+            kids.setdefault(art_key, []).append((si, body[s:e], s, e))
+    parents = sorted(
+        (min(k[2] for k in ks), max(k[3] for k in ks), key, ks) for key, ks in kids.items()
+    )
+    for order, (s, e, key, ks) in enumerate(parents):
+        content = "".join(c for _, c, _, _ in sorted(ks, key=lambda k: k[:2]))
+        rows.append((url, key, None, 1, order, s, e, content, False, off))
+    return rows
+
+
+def chunk_documents(extracted: DataFrame) -> DataFrame:
+    """extracted(url, body, body_span_start, ...) -> the chunk tree
+    (adjacency-list encoding): (url, path_key, parent_path, depth,
+    sibling_order, span_start, span_end, content, is_leaf,
+    body_span_start).
+
+    Spans are body-relative; every row carries its page's
+    ``body_span_start``, so ``materialize.absolute_chunks`` re-bases
+    them with a projection, not a join back to the pages.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for url, body in zip(pdf["url"], pdf["body"]):
-                arts = list(_ARTICLE_RE.finditer(body))
-                if not arts:
-                    continue
-                secs = list(_SECTION_RE.finditer(body))
-                # one tokenization/index per document, shared by every
-                # section's two boundary alignments
-                aligner = DocAligner(body)
-                for ai, am in enumerate(arts):
-                    art_key = f"ARTICLE_{am.group(1)}"
-                    art_end = arts[ai + 1].start() if ai + 1 < len(arts) else len(body)
-                    in_art = [m for m in secs if am.start() <= m.start() < art_end]
-                    for si, sm in enumerate(in_art):
-                        seg_start = sm.start()
-                        seg_end = (
-                            in_art[si + 1].start() if si + 1 < len(in_art) else art_end
-                        )
-                        start_sent, end_sent = _boundary_sentences(body, seg_start, seg_end)
-                        if not start_sent:
-                            continue
-                        s, e = aligner.sentence_range(start_sent, end_sent)
-                        rows.append(
-                            (
-                                url,
-                                f"{art_key}/section_{sm.group(1)}_{sm.group(2)}",
-                                art_key,
-                                2,
-                                si,
-                                s,
-                                e,
-                                body[s:e],
-                                start_sent,
-                                end_sent,
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in LEAF_SCHEMA.fields],
-            )
+            for url, body, off in zip(pdf["url"], pdf["body"], pdf["body_span_start"]):
+                rows.extend(_document_tree(url, body, int(off)))
+            yield pd.DataFrame(rows, columns=CHUNK_SCHEMA.fieldNames())
 
     from legal_knowledge_graph_spark.functions.partitioning import ensure_parallel
 
-    return ensure_parallel(extracted.select("url", "body")).mapInPandas(
-        run, LEAF_SCHEMA
-    )
-
-
-def build_chunk_tree(leaves: DataFrame) -> DataFrame:
-    """Leaf rows -> full chunks table (adjacency-list tree encoding).
-
-    Internal (Article) rows follow the reference's ``transform_tree``
-    aggregation exactly (chunker.py:172-174): span = (min child start,
-    max child end); content = concatenation of child contents in
-    sibling order. Leaf content was emitted by the fused
-    propose+align map stage (``body[s:e]``), so this stage needs NO
-    join back to the pages table — the only shuffle is the
-    map-side-combinable groupBy(url, parent) for article rows.
-
-    Output: (url, path_key, parent_path, depth, sibling_order,
-    span_start, span_end, content, is_leaf). Spans are body-relative;
-    materialization converts to absolute via body_span_start.
-    """
-    leaf_rows = leaves.select(
-        "url",
-        "path_key",
-        "parent_path",
-        "depth",
-        "sibling_order",
-        "span_start",
-        "span_end",
-        "content",
-        F.lit(True).alias("is_leaf"),
-    )
-
-    # Article sibling_order = rank of the article within the url by
-    # first child start (documents emit articles in order, so min
-    # child span_start is the article's position).
-    art_agg = leaf_rows.groupBy("url", "parent_path").agg(
-        F.min("span_start").alias("span_start"),
-        F.max("span_end").alias("span_end"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("sibling_order", "content"))),
-                lambda x: x["content"],
-            ),
-            "",
-        ).alias("content"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("url").orderBy("span_start")
-    art_rows = art_agg.select(
-        "url",
-        F.col("parent_path").alias("path_key"),
-        F.lit(None).cast("string").alias("parent_path"),
-        F.lit(1).alias("depth"),
-        (F.row_number().over(w) - 1).alias("sibling_order"),
-        "span_start",
-        "span_end",
-        "content",
-        F.lit(False).alias("is_leaf"),
-    )
-    return leaf_rows.unionByName(art_rows)
-
-
-def chunk_documents(extracted: DataFrame) -> DataFrame:
-    """Full chunking stage: propose+align -> tree."""
-    return build_chunk_tree(propose_and_align(extracted))
+    return ensure_parallel(
+        extracted.select("url", "body", "body_span_start")
+    ).mapInPandas(run, CHUNK_SCHEMA)

@@ -148,10 +148,14 @@ def chunk_nodes(chunks_abs: DataFrame) -> DataFrame:
 
 
 def entity_nodes(canonical_map: DataFrame) -> DataFrame:
-    """One Entity node per canonical id (the KG side)."""
+    """One Entity node per canonical id (the KG side).
+
+    ``link_entities`` sets a component's ``canonical_id`` to the min
+    ``surface_norm`` over its distinct surfaces, so exactly one row per
+    id has ``surface_norm == canonical_id``: a filter, not a
+    ``distinct``."""
     return _finish_nodes(
-        canonical_map.select("canonical_id")
-        .distinct()
+        canonical_map.where(F.col("surface_norm") == F.col("canonical_id"))
         .select(
             node_id("canonical_id", F.lit("Entity")).alias("node_id"),
             F.lit("Entity").alias("label"),
@@ -168,14 +172,14 @@ def entity_nodes(canonical_map: DataFrame) -> DataFrame:
     )
 
 
-def absolute_chunks(chunks: DataFrame, extracted: DataFrame) -> DataFrame:
-    """Convert body-relative chunk spans to absolute text offsets via
-    body_span_start (broadcastable per-url offsets)."""
-    offs = extracted.select("url", "body_span_start")
+def absolute_chunks(chunks: DataFrame) -> DataFrame:
+    """Re-base body-relative chunk spans to absolute text offsets: a
+    projection, since the chunker gives every row of a document its
+    page's ``body_span_start``."""
+    off = F.col("body_span_start")
     return (
-        chunks.join(offs, "url")
-        .withColumn("span_start", F.col("span_start") + F.col("body_span_start"))
-        .withColumn("span_end", F.col("span_end") + F.col("body_span_start"))
+        chunks.withColumn("span_start", F.col("span_start") + off)
+        .withColumn("span_end", F.col("span_end") + off)
         .drop("body_span_start")
     )
 
@@ -191,9 +195,10 @@ def tree_edges(chunks_abs: DataFrame) -> DataFrame:
     swap (the reference writes both directions explicitly).
 
     A CHILD edge's parent id is computed from its siblings, not joined
-    for: ``chunker.build_chunk_tree`` gives each parent the span (min
-    child start, max child end), and ``absolute_chunks`` adds one offset
-    per url to every row, so the parent's node id is
+    for: the chunker's per-document pass gives each parent the span
+    (min child start, max child end), and ``absolute_chunks`` adds the
+    one ``body_span_start`` of the url to every row, so the parent's
+    node id is
     ``node_id(url, parent_path, min(span_start), max(span_end))`` over
     the (url, parent_path) window. Roots (parent_path null) hang off
     the url's Corpus node.

@@ -100,21 +100,12 @@ def run_pipeline(
     chunks = cat.stage("chunks", lambda: chunk_documents(extracted))
     chunks_sum = cat.stage("chunks_summarized", lambda: summarize_tree(chunks))
 
-    # absolute_chunks joins the chunk tree back to the extracted pages
-    # (span re-basing) and feeds BOTH the nodes and edges stages; the
-    # lazy checkpoint materializes that join once instead of once per
-    # consumer. Under AQE even a lazy localCheckpoint runs its job when
-    # created, so it is built only when one of its consumers will be
-    # computed: a reopen of a committed workdir runs no Spark job.
-    if not (cat.committed("nodes") and cat.committed("edges")):
-        chunks_abs = absolute_chunks(chunks_sum, extracted).localCheckpoint(eager=False)
-
     def _nodes() -> DataFrame:
         doc_sum = document_summaries(chunks_sum)
         toc = build_toc(chunks_sum)
         nodes = (
             corpus_nodes(extracted, doc_sum, toc)
-            .unionByName(chunk_nodes(chunks_abs))
+            .unionByName(chunk_nodes(absolute_chunks(chunks_sum)))
             .unionByName(entity_nodes(canonical_map))
         )
         # attach_vectors is a true single-pass map since round 6 (no
@@ -138,7 +129,9 @@ def run_pipeline(
     def _edges() -> DataFrame:
         # same balanced-write rationale as the nodes write above
         return repartition_buckets_balanced(
-            finish_edges(tree_edges(chunks_abs).unionByName(triple_edges(triples))),
+            finish_edges(
+                tree_edges(absolute_chunks(chunks_sum)).unionByName(triple_edges(triples))
+            ),
             "bucket",
             N_BUCKETS,
         )

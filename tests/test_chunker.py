@@ -137,3 +137,75 @@ def test_summarize_tree_partition_local_equals_level_join(spark):
     got = sorted(tuple(r) for r in summarize_tree(df).collect())
     want = sorted(tuple(r) for r in summarize_tree_reference(df).collect())
     assert got == want
+
+
+def _chunk_tree_by_aggregation(leaves):
+    """Article rows derived from the section rows in Catalyst: a
+    groupBy(url, parent_path) aggregate, a row_number window for the
+    article's sibling_order and a union (the chunker's first
+    formulation)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    art = leaves.groupBy("url", "parent_path").agg(
+        F.min("span_start").alias("span_start"),
+        F.max("span_end").alias("span_end"),
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("sibling_order", "content"))),
+                lambda x: x["content"],
+            ),
+            "",
+        ).alias("content"),
+    )
+    w = Window.partitionBy("url").orderBy("span_start")
+    return leaves.unionByName(
+        art.select(
+            "url",
+            F.col("parent_path").alias("path_key"),
+            F.lit(None).cast("string").alias("parent_path"),
+            F.lit(1).alias("depth"),
+            (F.row_number().over(w) - 1).alias("sibling_order"),
+            "span_start",
+            "span_end",
+            "content",
+            F.lit(False).alias("is_leaf"),
+        )
+    )
+
+
+def test_one_pass_tree_equals_aggregation(spark):
+    """The chunker emits each document's article rows in the pass that
+    aligns its sections; they equal the Catalyst aggregation of those
+    sections on 80 generated pages, on zero rows, and on a body whose
+    ARTICLE heading has no Section (no article row). Every row carries
+    its page's body_span_start."""
+    from pyspark.sql import functions as F
+
+    cols = [
+        "url", "path_key", "parent_path", "depth", "sibling_order",
+        "span_start", "span_end", "content", "is_leaf",
+    ]
+    no_section = spark.createDataFrame(
+        [("u0", "ARTICLE I. Definitions only, no sections here.", 7)],
+        "url string, body string, body_span_start long",
+    )
+    extracted = extract_text(generate_pages(spark, N))
+    cases = [
+        extracted,
+        extracted.where(F.lit(False)),
+        no_section,
+        extracted.select("url", "body", "body_span_start").unionByName(no_section),
+    ]
+    for pages in cases:
+        tree = chunk_documents(pages)
+        got = sorted(tuple(r) for r in tree.select(*cols).collect())
+        want = sorted(
+            tuple(r)
+            for r in _chunk_tree_by_aggregation(tree.where("is_leaf").select(*cols)).collect()
+        )
+        assert got == want
+        offs = dict(pages.select("url", "body_span_start").collect())
+        assert all(offs[r["url"]] == r["body_span_start"] for r in tree.collect())
+    assert chunk_documents(no_section).count() == 0
+    assert len(got) > N

@@ -223,8 +223,8 @@ def test_stored_schemas_match_inference(spark, built40):
 
 
 def test_reopen_runs_no_spark_jobs(spark, built40):
-    """A committed workdir reopens without a schema-inference read or
-    the nodes/edges input checkpoint: zero Spark jobs."""
+    """A committed workdir reopens without a schema-inference read:
+    zero Spark jobs."""
     wd, _ = built40
     pages = generate_pages(spark, 40)
     out, jobs = _jobs(spark.sparkContext, lambda: run_pipeline(spark, pages, wd))
@@ -289,7 +289,7 @@ def test_tree_edges_child_rows_equal_join(spark, built40):
 
     wd, _ = built40
     out = run_pipeline(spark, generate_pages(spark, 40), wd)
-    chunks_abs = absolute_chunks(out["chunks_summarized"], out["extracted"])
+    chunks_abs = absolute_chunks(out["chunks_summarized"])
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
@@ -304,6 +304,64 @@ def test_tree_edges_child_rows_equal_join(spark, built40):
     assert rows(child(chunks_abs)) == want
     empty = chunks_abs.where(F.lit(False))
     assert rows(child(empty)) == rows(_child_edges_by_join(empty)) == []
+
+
+def test_build_stage_job_counts(spark, tmp_path, monkeypatch):
+    """Spark jobs per stage of a 20-page build, one job group per stage:
+    the chunker's one map pass is the chunks stage's only job, and the
+    nodes and edges stages re-base chunk spans with a projection, not a
+    join. 34 jobs in all here, steady over 3 repeats (4 cores)."""
+    sc = spark.sparkContext
+    groups = {}
+    stage = StageCatalog.stage
+
+    def grouped(cat, name, compute, partition_col=None, force=False):
+        group = groups[name] = f"test-build-{name}-{next(_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            return stage(cat, name, compute, partition_col, force)
+        finally:
+            sc._jsc.clearJobGroup()
+
+    monkeypatch.setattr(StageCatalog, "stage", grouped)
+    run_pipeline(spark, generate_pages(spark, 20), str(tmp_path / "jobs"))
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    jobs = {s: len(sc.statusTracker().getJobIdsForGroup(g)) for s, g in groups.items()}
+    assert set(jobs) == set(STAGES)
+    assert jobs["chunks"] == 1, jobs
+    assert jobs["nodes"] <= 7 and jobs["edges"] <= 4, jobs
+
+
+def test_entity_nodes_equal_distinct(spark, built40):
+    """``entity_nodes`` keeps the canonical-map row whose surface is its
+    own canonical id; that gives the rows of a ``distinct`` over the
+    canonical ids, on the 40-page build and on alias surfaces whose
+    components hold several surfaces."""
+    from legal_knowledge_graph_spark.operators.linking import link_entities
+    from legal_knowledge_graph_spark.operators.materialize import entity_nodes
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def by_distinct(cmap):
+        # one row per distinct canonical id, standing as its own surface
+        ids = cmap.select("canonical_id").distinct()
+        return entity_nodes(ids.withColumn("surface_norm", F.col("canonical_id")))
+
+    wd, _ = built40
+    built = run_pipeline(spark, generate_pages(spark, 40), wd)["canonical_map"]
+    aliases = alias_table()[: 5 * 40]
+    linked = link_entities(
+        spark.createDataFrame(
+            [(f"u{i}", s) for i, (s, _) in enumerate(aliases)], ["url", "surface"]
+        )
+    )
+    sizes = [r["n"] for r in linked.groupBy("canonical_id").agg(F.count("*").alias("n")).collect()]
+    assert max(sizes) > 1
+    for cmap in (built, linked):
+        want = rows(by_distinct(cmap))
+        assert len(want) == cmap.select("canonical_id").distinct().count() > 0
+        assert rows(entity_nodes(cmap)) == want
 
 
 def test_zero_page_build(spark, tmp_path):

@@ -391,3 +391,18 @@ def test_ensure_parallel_repartitions_broadcast_stream_side(spark, tmp_path):
     assert out.rdd.getNumPartitions() == target
     shuffled = scan.groupBy((F.col("id") % 7).alias("k")).count()
     assert ensure_parallel(shuffled) is shuffled
+
+
+def test_chunk_documents_plan_no_exchange(spark, pages_path, tmp_path):
+    """The chunker aligns sections and builds each document's article
+    rows in one map pass: over an extracted table read in enough splits,
+    its plan has no shuffle."""
+    from legal_knowledge_graph_spark.operators.chunker import chunk_documents
+
+    path = str(tmp_path / "extracted")
+    target = spark.sparkContext.defaultParallelism
+    extract_text(spark.read.parquet(pages_path)).repartition(target, "url").write.parquet(path)
+    tree = chunk_documents(spark.read.parquet(path))
+    phys = _physical(tree)
+    assert "Exchange" not in phys, phys
+    assert tree.where(~F.col("is_leaf")).count() > 0
